@@ -263,29 +263,28 @@ def _log_analyzer_reduce_df(kv: DataFrame) -> DataFrame:
         F.expr("try_cast(value AS BIGINT)").alias("v"),
     )
     # ONE aggregation over the full composite key carries every downstream
-    # tally; it must be CACHED because the six output branches prune it to
-    # different column sets, which de-canonicalizes the subtree and defeats
-    # ReuseExchange — measured without the cache, the plan executes 13 full
-    # input scans (one per branch path) and zero Reused* nodes appear. With
-    # the cache the corpus is read once and every branch re-aggregates the
-    # small in-memory composite-key frame (bounded by distinct
-    # (crawler, domain, path) triples, not by input rows). CacheManager
-    # keys on the canonicalized plan, so repeated query invocations share
-    # one entry; DISTINCT inputs (different sf_dirs) each hold one
-    # composite-key-sized entry for the session — the deliberate price of
-    # the 13-scans-to-1 reduction (see SCALE.md). The count() below also
-    # makes plan construction eager by one job. Rows whose values ALL fail
+    # tally. An eager localCheckpoint materializes it in one job at plan
+    # construction: the corpus is scanned once, and the pipeline below
+    # reads the small composite-key frame (bounded by distinct (crawler,
+    # domain, path) triples, not by input rows) from the block manager.
+    # Measured on a 4-vCPU VM at local[4] (perfbench dfs_stream corpus,
+    # lowered run + pull, median of 5 interleaved reps in one JVM): 1.45 s
+    # with this checkpoint, 1.89 s with ``.cache()`` + ``count()``, 1.39 s
+    # unmaterialized (``trip`` has had one consumer since r15). Unlike
+    # ``.cache()`` it leaves no CacheManager entry in the session; such an
+    # entry would not save work anyway, as every ``Warehouse.store`` to the
+    # input path recaches it by path. The price: the registered
+    # ``mr_log_analyzer`` query recomputes ``trip`` on every call (sf0.1,
+    # local[4]: 1.61 s per call; a session cache entry served repeat calls
+    # in 1.07 s and cold calls in 2.11 s). Rows whose values ALL fail
     # int-parse keep their r_id here with a NULL total (SUM ignores
     # nulls), preserving the plugin's zero-count header-only output for
     # such partitions.
-    trip = rows.groupBy("r_id", "crawler", "domain", "path").agg(
-        F.sum("v").alias("cnt")
-    ).cache()
-    # populate the cache NOW (one scalar job): the downstream stages
-    # execute as concurrent AQE stages, and if they race an unpopulated
-    # cache each recomputes the corpus subtree — measured 7.4 s vs 1.9 s
-    # at sf0.1 (r14, six-branch shape; the race is the same today)
-    trip.count()
+    trip = (
+        rows.groupBy("r_id", "crawler", "domain", "path")
+        .agg(F.sum("v").alias("cnt"))
+        .localCheckpoint(eager=True)
+    )
     # r15 restructure (guide §2.4 "remove shuffles outright" / §1.2): the
     # previous shape assembled the summary as a UNION of SIX independent
     # aggregation subtrees over the cached triple frame (dm/cr/ur counts,

@@ -7,17 +7,27 @@ others are still running; the storage node serves the blob from
 The Spark-native twin exploits a plan fact of the HOT reduce paths in
 ``MapReduceJob._plan``: each r_id's rows live in exactly one output
 partition — the Arrow path is ``groupBy("r_id").applyInPandas`` (hash
-exchange on r_id; a group is never split) and the ``PerKeyIntSumFormat``
+exchange on r_id; a group is never split), the ``PerKeyIntSumFormat``
 lowering ends in a ``Window.partitionBy("r_id")`` rank forcing the same
-exchange. Where that holds, the driver pulls result partitions as
-CONCURRENT single-partition jobs (``sc.runJob(rdd, list, [p])`` from a
-bounded thread pool — the mechanism behind ``toLocalIterator``, made
-partition-explicit and parallel) and writes every reducer file in a
-partition the moment that partition's job returns. Reducers therefore
-EXECUTE in parallel (the reference schedules all R reducers at once) and
-each blob is complete on disk in reducer-finish order while stragglers
-are still running — the reference's latency profile. Design points:
+exchange, and the ``ReduceExpr`` lowerings end in an explicit r_id
+repartition. Where that holds, the driver pulls result partitions as
+CONCURRENT single-partition jobs from a bounded thread pool and writes
+every reducer file in a partition the moment that partition's job
+returns. Reducers therefore EXECUTE in parallel (the reference schedules
+all R reducers at once) and each blob is complete on disk in
+reducer-finish order while stragglers are still running — the
+reference's latency profile. Design points:
 
+- Direct JVM serve: a DataFrame's row RDD (``javaToPython``) already
+  holds rows the JVM pickled, so each pull job runs
+  ``PythonRDD.runJob`` on that RDD itself and the driver unpickles the
+  job-result socket (see ``_iter_partition``). No Python worker touches
+  the rows on the way out: ``sc.runJob`` would wrap the RDD in a
+  ``mapPartitions`` stage that sends every row JVM -> Python worker ->
+  JVM -> driver and re-pickles it for nothing (measured on a 4-vCPU VM
+  at local[4], the perfbench dfs_stream corpus at seed 7: the
+  inverted_index pull 4.79 -> 2.65 s without that stage, median of 5
+  interleaved reps in one JVM).
 - Partition-explicit pulls: a plain row iterator can only detect "this
   reducer ended" by fetching the NEXT row, which would force another
   partition's reducers to run first. Sequential per-partition pulls fix
@@ -30,36 +40,37 @@ are still running — the reference's latency profile. Design points:
   job end at gate sizes). At real output sizes coalescing is a no-op
   anyway — the advisory partition size keeps big reducers separate.
 - Driver memory: each pull job STREAMS its partition's rows through the
-  job-result socket (``sc.runJob`` minus its materializing ``list()`` —
-  see ``_iter_partition``) and the writer appends each row to the
-  reducer file as it arrives, so the PYTHON driver holds O(socket
-  buffer) rows regardless of partition size or PULL_POOL. The JVM
-  driver transiently unrolls each in-flight partition's serialized
-  bytes before serving them (the same per-partition collect
-  ``toLocalIterator`` does — Spark has no public single-partition lazy
-  serve), so the JVM-side bound is PULL_POOL x max serialized partition
-  size: at the reference's 64 MiB blob scale ~0.5 GB at the default
-  pool. PULL_POOL is settable via ``GO_DFS_MR_PULL_POOL`` (ADVICE r14)
-  for deployments with bigger reducer outputs; 1 reproduces
-  ``toLocalIterator``'s memory profile while keeping finish-order
-  writes.
+  job-result socket and the writer appends each row to the reducer file
+  as it arrives, so the PYTHON driver holds O(socket buffer) rows
+  regardless of partition size or PULL_POOL. The JVM driver transiently
+  unrolls each in-flight partition's serialized bytes before serving
+  them (the same per-partition collect ``toLocalIterator`` does — Spark
+  has no public single-partition lazy serve), so the JVM-side bound is
+  PULL_POOL x max serialized partition size: at the reference's 64 MiB
+  blob scale ~0.5 GB at the default pool. PULL_POOL is settable via
+  ``GO_DFS_MR_PULL_POOL`` for deployments with bigger reducer outputs;
+  1 reproduces ``toLocalIterator``'s memory profile while keeping
+  finish-order writes.
 
-The invariant is NOT guaranteed for an arbitrary ``ReduceExpr`` lowering
-(e.g. log_analyzer's builder unions several relational branches whose
-output partitionings can disagree, splitting one r_id across pulled
-partitions — observed live on the CLI). The writer detects the split at
-file-claim time and FALLS BACK to the classic ordered drain (global
-orderBy(r_id, seq) + toLocalIterator): every file is rewritten complete
-and correctly ordered, at the cost of job-end latency — correctness
-never rides on the plan shape. ``on_complete`` may re-fire for a reducer
-whose phase-1 file was rewritten by the fallback.
+The invariant is NOT guaranteed for an arbitrary result frame handed to
+``stream_reducer_results`` (a round-robin repartition, or a union of
+branches whose output partitionings disagree, splits one r_id across
+pulled partitions). The writer detects the split at file-claim time and
+FALLS BACK to the classic ordered drain (global orderBy(r_id, seq) +
+toLocalIterator): every file is rewritten complete and correctly
+ordered, at the cost of job-end latency — correctness never rides on
+the plan shape. ``on_complete`` may re-fire for a reducer whose phase-1
+file was rewritten by the fallback.
 
 ``tests/test_cli.py::test_mr_streams_reducer_files_mid_job`` proves the
 mid-job behavior the hard way — a reducer that refuses to produce until
-an earlier reducer's pulled file exists still completes — and
-``test_mr_cli_lowered_log_analyzer_streams_per_reducer`` pins the
-fallback: the lowered log_analyzer CLI run completes with files byte-
-identical to the unlowered Arrow reduce.
+an earlier reducer's pulled file exists still completes;
+``test_mr_cli_lowered_log_analyzer_streams_per_reducer`` pins that the
+lowered log_analyzer takes the mid-job path with files byte-identical to
+the unlowered Arrow reduce; ``test_result_pull_runs_no_python_identity_stage``
+pins the direct serve; and
+``tests/test_properties.py::test_streamed_pull_files_equal_ordered_drain``
+pins the fallback on split plans.
 """
 
 from __future__ import annotations
@@ -71,24 +82,33 @@ from concurrent.futures import ThreadPoolExecutor, as_completed
 
 from pyspark.sql import DataFrame
 
-# concurrent single-partition pull jobs; local[32] handles 8 comfortably
-# and a cluster scheduler treats them as ordinary FIFO jobs. Also the
-# JVM-side memory knob: at most this many partitions' serialized bytes
-# are in flight at once (the Python side streams row-at-a-time either
-# way). Overridable per deployment via GO_DFS_MR_PULL_POOL.
+# concurrent single-partition pull jobs; a cluster scheduler treats them
+# as ordinary FIFO jobs. The pool size is flat where measured (4-vCPU VM,
+# local[4], perfbench dfs_stream corpus, inverted_index pull, median of 5
+# interleaved reps in one JVM): 8 -> 2.65 s, 4 -> 2.90 s. An earlier probe
+# on the same box found skipping empty result partitions flat as well
+# (2.58 s vs 2.72 s), so the default stays 8 and empty partitions are
+# pulled like the rest. Also the JVM-side memory bound: at most this
+# many partitions' serialized bytes are in flight at once (the Python
+# side streams row-at-a-time either way). Overridable per deployment via
+# GO_DFS_MR_PULL_POOL.
 PULL_POOL = int(os.environ.get("GO_DFS_MR_PULL_POOL", "8") or "8")
 
 
 def _iter_partition(sc, rdd, p: int):
-    """Lazily stream one partition's rows: ``sc.runJob(rdd, f, [p])``
-    without the materializing ``list()`` around the result socket.
-    PySpark's runJob already serves job results through a local socket
-    (`_load_from_socket`) and only the trailing ``list()`` makes it
-    O(partition) in driver memory — iterating the socket directly keeps
-    the pull O(buffer). Falls back to the materializing runJob if the
-    private helpers move (they are stable across pyspark 3.x/4.x; the
-    fallback trades memory, never correctness). A moved helper shows up
-    as ImportError/AttributeError; a changed JVM-side runJob SIGNATURE
+    """Lazily stream one partition's rows, served straight from the JVM:
+    ``PythonRDD.runJob`` on ``rdd``'s own Java RDD for partition ``p``,
+    read through the job-result socket (`_load_from_socket`) with
+    ``rdd``'s deserializer. For a DataFrame's row RDD the JVM already
+    pickled the rows, so no Python worker runs. This is ``sc.runJob(rdd,
+    f, [p])`` minus its two costs: the ``mapPartitions(f)`` stage it
+    wraps around the RDD (a Python worker round trip that re-pickles
+    every row) and the trailing ``list()`` that makes it O(partition) in
+    driver memory — iterating the socket keeps the pull O(buffer).
+    Falls back to the materializing ``sc.runJob`` if the private helpers
+    move (they are stable across pyspark 3.x/4.x; the fallback trades
+    memory and the extra stage, never correctness). A moved helper shows
+    up as ImportError/AttributeError; a changed JVM-side runJob SIGNATURE
     as a plain Py4JError ("method does not exist") — all pre-iteration,
     so all safely degrade to the materializing path. A GENUINE job
     failure at this synchronous call is a Py4JJavaError and must
@@ -98,11 +118,8 @@ def _iter_partition(sc, rdd, p: int):
     try:
         from pyspark.rdd import _load_from_socket
 
-        mapped = rdd.mapPartitions(lambda it: it)
-        sock_info = sc._jvm.PythonRDD.runJob(
-            sc._jsc.sc(), mapped._jrdd, [p]
-        )
-        return _load_from_socket(sock_info, mapped._jrdd_deserializer)
+        sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), rdd._jrdd, [p])
+        return _load_from_socket(sock_info, rdd._jrdd_deserializer)
     except Py4JJavaError:
         raise
     except (ImportError, AttributeError, Py4JError):

@@ -125,8 +125,7 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 redundant corpus passes are the real 100 TB cost. The trade:
     MEMORY_AND_DISK storage of the per-doc arrays (compact vs raw text;
     Spark evicts LRU under pressure) held per distinct input for the
-    session — the same deliberate trade as mr_log_analyzer's tally
-    cache (SCALE.md). Memoized per (session, sf dir) via
+    session. Memoized per (session, sf dir) via
     ``memo.session_memo`` so the three LSH-family consumers share ONE
     materialization per sweep instead of accreting a persisted copy per
     query invocation.

@@ -378,10 +378,17 @@ def common_neighbors_topk_from_edges(
     # A/B at sf0.1: 17.5 -> 15.2 s median (-13%), identical top-k
     # (tools/cn_variants_r16.py; fastmap/sort-agg/partition-count arms
     # all measured worse or flat and are recorded in OPTIMIZATION_r16).
-    # Build side = the adjacency (bounded per partition by the apex cap);
-    # at any scale its per-partition hash map is |adj|/parts rows, and
-    # the SHUFFLE_HASH hint falls back to SMJ only if Spark cannot build
-    # it, so the plan stays spill-safe.
+    # Build side = the hinted adjacency ``b`` (BuildRight, pinned in
+    # tests/test_catalog_plans.py). Spark has NO runtime fallback from a
+    # hinted shuffled-hash join to sort-merge: the build map must fit in
+    # the task's execution memory or the task fails. Two things bound it.
+    # The apex cap: hubs above ``cap`` were anti-joined away above, so no
+    # join key puts more than ``cap`` rows into one partition's map and
+    # no skewed apex can concentrate the build. Partition sizing: the
+    # build exchange hashes the adjacency over spark.sql.shuffle.partitions
+    # and AQE only merges partitions up to the advisory size, so each map
+    # holds about |adj| / shuffle partitions rows (2.4 M / 32 = 75 k at
+    # sf0.1); a larger graph needs that partition count raised with it.
     a, b = adj.alias("a"), adj.hint("SHUFFLE_HASH").alias("b")
     # the wedge aggregation keys on the PAIR PACKED INTO ONE LONG
     # (p1 << 32 | p2): half the shuffle key width and a single-column

@@ -556,8 +556,10 @@ def test_graph_family_plan_shapes(spark, sf_dir):
     # r16: the wedge self-join is a SHUFFLED-HASH join (no sort, no
     # per-probe match-buffer re-scan, per-partition build maps) — the
     # broadcast the planner picked unhinted shipped the WHOLE adjacency
-    # map to every task and measured 13% slower (tools/cn_variants_r16.py)
-    assert "ShuffledHashJoin Inner" in a["plan"]
+    # map to every task and measured 13% slower (tools/cn_variants_r16.py).
+    # The build side is the hinted adjacency (the right input): its map
+    # size is what the apex cap and partition sizing bound (graph.py)
+    assert "ShuffledHashJoin Inner BuildRight" in a["plan"]
 
     a = audit_plan(skyline_parts_2d(spark, sf_dir))
     assert not a["has_python_worker"]

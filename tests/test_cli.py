@@ -655,6 +655,59 @@ def test_result_pull_falls_back_without_socket_helper(spark, monkeypatch):
     assert sorted(int(r.line) for r in rows) == list(range(100))
 
 
+def test_result_pull_runs_no_python_identity_stage(
+    spark, tmp_path, monkeypatch
+):
+    """The pull serves each partition's pickled rows straight from the
+    JVM (``PythonRDD.runJob`` on the row RDD itself): no
+    ``mapPartitions`` wrapper, so no Python worker re-pickles rows that
+    it does not transform. With ``RDD.mapPartitions`` made to raise, an
+    Arrow-path MR job's streamed files must still equal the ordered
+    job-end drain byte for byte. The materializing fallback goes through
+    ``sc.runJob`` (which calls ``mapPartitions``), so this also pins that
+    the direct path, not the fallback, served the rows."""
+    import os
+
+    import pyspark.rdd
+
+    from go_dfs_mapreduce_spark.mapreduce import MapReduceJob
+    from go_dfs_mapreduce_spark.mapreduce import results as results_mod
+
+    def f_map(file, line_no, line, out):
+        for w in line.split():
+            out.append(w)
+            out.append("1")
+
+    def f_reduce(keys, values, out):
+        tally = {}
+        for k, v in zip(keys, values):
+            tally[k] = tally.get(k, 0) + int(v)
+        for k in sorted(tally):
+            out.append(f"{k}={tally[k]}")
+
+    def no_identity_stage(self, *args, **kwargs):
+        raise AssertionError("result pull ran a Python mapPartitions stage")
+
+    inputs = spark.createDataFrame(
+        [("t.txt", i, f"w{i % 7} w{i % 3} x") for i in range(1, 60)],
+        "file string, line_number long, line string",
+    )
+    result = MapReduceJob("t_pull_no_identity", f_map, f_reduce, r=4).run(
+        inputs
+    )
+    monkeypatch.setattr(pyspark.rdd.RDD, "mapPartitions", no_identity_stage)
+    streamed, ordered = tmp_path / "streamed", tmp_path / "ordered"
+    ordered.mkdir()
+    done = results_mod.stream_reducer_results(result, str(streamed))
+    want = results_mod._ordered_drain(result, str(ordered), None)
+
+    def read(d):
+        return {f: (d / f).read_bytes() for f in os.listdir(d)}
+
+    assert sorted(done) == sorted(want) and done
+    assert read(streamed) == read(ordered)
+
+
 def test_cli_dfs_daemon_repairs_off_dead_node(spark, tmp_path, capsys):
     """Dead-node re-replication (ADVICE r14): a replica sitting on a
     flatlined-but-present node is NOT a healthy copy — the daemon's
@@ -816,3 +869,46 @@ def test_mr_cli_lowered_log_analyzer_streams_per_reducer(
     stream_reducer_results(job.run(inputs), str(arrow_dir))
     arrow = {f.name: f.read_text() for f in arrow_dir.iterdir()}
     assert lowered == arrow and lowered
+
+
+def test_lowered_log_analyzer_leaves_no_cached_frame(spark, tmp_path):
+    """No query may leave a cached frame in the session: the lowered
+    log_analyzer reduce materializes its composite tally with an eager
+    ``localCheckpoint``, not ``.cache()``, so after the job and its pull
+    the session's CacheManager is empty. The files still equal the
+    unlowered Arrow reduce (the byte-for-byte pin is
+    ``test_mr_cli_lowered_log_analyzer_streams_per_reducer``)."""
+    from go_dfs_mapreduce_spark.mapreduce import MapReduceJob, plugins
+    from go_dfs_mapreduce_spark.mapreduce.results import (
+        stream_reducer_results,
+    )
+
+    log = (
+        "10.0.0.1 - - [x] \"GET /a HTTP/1.1\" 200 123 \"-\" \"bot\"",
+        "10.0.0.2 - - [x] \"GET http://example.com/b HTTP/1.1\" 404 5 \"-\" \"ua\"",
+        "10.0.0.3 - - [x] \"GET http://example.org/c/d HTTP/1.1\" 200 9 \"-\" \"bot\"",
+    )
+    inputs = spark.createDataFrame(
+        [("crawl.log", i, log[i % len(log)]) for i in range(1, 91)],
+        "file string, line_number long, line string",
+    )
+    # the same contract bench.py runs each op under: start from an empty
+    # cache (session memos re-persist on their next use)
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_manager.isEmpty()
+
+    def files(lower: bool, out_dir) -> dict[str, str]:
+        job = MapReduceJob(
+            f"t_log_no_cache_{lower}",
+            plugins.log_analyzer_map,
+            plugins.log_analyzer_reduce,
+            r=plugins.LOG_ANALYZER_R,
+            lower=lower,
+        )
+        stream_reducer_results(job.run(inputs), str(out_dir))
+        return {f.name: f.read_text() for f in out_dir.iterdir()}
+
+    lowered = files(True, tmp_path / "lowered")
+    assert cache_manager.isEmpty()
+    assert lowered and lowered == files(False, tmp_path / "arrow")
