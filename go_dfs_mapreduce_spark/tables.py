@@ -89,10 +89,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def _parse_bytes(v: str) -> int:
     """Spark byte-size conf values: plain bytes ('134217728') or suffixed
     ('128m', '1g', '512k', optionally trailing 'b')."""
@@ -172,27 +168,28 @@ def spread_frame(df: DataFrame) -> DataFrame:
     current caller feeds a pruned single-table scan, where the file
     estimate IS the scan's split count. A frame with no file inputs
     (in-memory fixtures in tests) is left untouched — its partitioning
-    came from createDataFrame, not a collapsed file scan."""
+    came from createDataFrame, not a collapsed file scan.
+
+    A scan has at least one split per file, so the estimate is
+    ``max(files, ceil(bytes / maxPartitionBytes))``. A file whose size
+    cannot be read locally (hdfs/s3 URI) makes the estimate unknown, and
+    an unknown estimate leaves the frame as it is: a spread is only worth
+    its exchange on a scan known to be collapsed."""
     spark = df.sparkSession
     cores = max(spark.sparkContext.defaultParallelism, 1)
     files = df.inputFiles()
-    size = 0
-    for uri in files:
-        p = uri.removeprefix("file:")
-        try:
-            size += os.path.getsize(p)
-        except OSError:
-            # non-local URI (hdfs/s3): size unknown here — spread, since
-            # the only reason a caller opted in is a collapsed tiny scan,
-            # and at real scale the estimate branch below never triggers
-            # anyway (remote deployments pass >= cores splits)
-            return df.repartition(cores)
     if not files:
         return df
+    size = 0
+    for uri in files:
+        try:
+            size += os.path.getsize(uri.removeprefix("file:"))
+        except OSError:
+            return df
     max_split = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    est_splits = max(1, (size + max_split - 1) // max_split)
+    est_splits = max(len(files), (size + max_split - 1) // max_split)
     return df.repartition(cores) if est_splits < cores else df
 
 

@@ -171,6 +171,38 @@ def test_spread_frame_adds_exchange_only_when_underpartitioned(spark, sf_dir):
     assert spread_frame(wide) is wide
 
 
+def test_spread_frame_estimate_from_mocked_input_files(spark, tmp_path):
+    """The split estimate counts one split per file and treats an unknown
+    (remote) size as no-op; one small local file still spreads."""
+    from go_dfs_mapreduce_spark.tables import spread_frame
+
+    cores = spark.sparkContext.defaultParallelism
+
+    def frame(files):
+        df = spark.range(0, 100, 1, 1)
+        df.inputFiles = lambda: files
+        return df
+
+    remote = frame([f"hdfs://nn/t/part-{i:05d}.parquet" for i in range(cores)])
+    assert spread_frame(remote) is remote
+    one_remote = frame(["s3a://bucket/t/part-00000.parquet"])
+    assert spread_frame(one_remote) is one_remote
+
+    paths = []
+    for i in range(cores):
+        p = tmp_path / f"part-{i}.parquet"
+        p.write_bytes(b"x" * 64)
+        paths.append(f"file:{p}")
+    many_small = frame(paths)
+    assert spread_frame(many_small) is many_small
+
+    one_small = frame(paths[:1])
+    spread = spread_frame(one_small)
+    plan = spread._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan
+    assert spread.rdd.getNumPartitions() == cores
+
+
 def test_heavy_decoders_spread_light_decoders_do_not(spark, sf_dir):
     """r15 measured split (guide §2.5): compressed-codec decoders (JPEG,
     MJPEG-AVI) pay per-payload Python work heavy enough to fund a spread
