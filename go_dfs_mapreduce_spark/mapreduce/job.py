@@ -14,22 +14,27 @@ Mapping of the reference's framework operators (SURVEY.md §2.2):
   a non-ASCII lead byte follows Go's ToLower-of-invalid-slice behavior
   (U+FFFD -> byte 0xEF = 239) ('' maps to partition 0 where the
   reference would crash the mapper)
-- F5/F6/F7 sort + shuffle + k-way merge -> ``groupBy(r_id).applyInPandas``
-  with a byte-wise pair-unit sort inside the group (util/util.go:43-65
-  KVBufSort semantics: sort (key, value) units, keys before values)
-- F8 partition-wide reduce   -> one ``f_reduce(keys, values)`` call per
-  r_id group — NOT per key; re-grouping by key is the plugin's job, exactly
-  like sn/mr_actions.go:487-508
+- F5/F6/F7 sort + shuffle + k-way merge -> ``repartition(R, r_id)
+  .groupBy(r_id).applyInPandas`` with a byte-wise pair-unit sort inside
+  the group (util/util.go:43-65 KVBufSort semantics: sort (key, value)
+  units, keys before values)
+- F8 partition-wide reduce   -> R reducers are R shuffle partitions
+  (cn/mr_actions.go:242-249 schedules exactly R); one ``f_reduce(keys,
+  values)`` call per r_id group — NOT per key; re-grouping by key is the
+  plugin's job, exactly like sn/mr_actions.go:487-508
 - F9 ordered result sink     -> output DataFrame[r_id, seq, line];
   ``orderBy(r_id, seq)`` reproduces the client's r0..r(R-1) concatenation
   (cl/mr_actions.go:228-245)
 
-Why ``groupBy().applyInPandas`` instead of physically placing partition i
-on reducer i: the observable semantics are "each r_id group is reduced as
-one unit, in sorted order" — which group-by delivers with Spark's native
-shuffle (sort-based, spilling, AQE-balanced) while staying Arrow-batched.
-Physical placement was only ever the reference's *mechanism*
-(cn/mr_actions.go:242-249), not its semantics.
+The reduce exchange is ``hashpartitioning(r_id, R)`` with an explicit
+partition count, so AQE never coalesces it, and ``groupBy(r_id)`` reuses
+that partitioning without a second exchange. Each r_id lives in exactly
+one of the R partitions; the streamed result pull (results.py) writes a
+reducer's file when its partition's job returns. Hash placement may put
+two r_ids in one partition and leave another empty (r_id i is not pinned
+to partition i as in the reference): the observable semantics are "each
+r_id group is reduced as one unit, in sorted order", which the shuffle
+delivers while staying Arrow-batched.
 
 Scale note: the parity partitioner is pathologically skewed by design
 (26-way split on first character of a Zipf vocabulary). It exists for
@@ -360,7 +365,11 @@ class MapReduceJob:
                 }
             )
 
-        return with_pid.groupBy("r_id").applyInPandas(reduce_phase, OUT_SCHEMA)
+        return (
+            with_pid.repartition(self.r, "r_id")
+            .groupBy("r_id")
+            .applyInPandas(reduce_phase, OUT_SCHEMA)
+        )
 
     def _lowered_per_key_sum(self, with_pid: DataFrame, spec: PerKeyIntSumFormat) -> DataFrame:
         """Native lowering of a ``PerKeyIntSumFormat`` reduce: the per-key

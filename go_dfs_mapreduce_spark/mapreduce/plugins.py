@@ -263,31 +263,23 @@ def _log_analyzer_reduce_df(kv: DataFrame) -> DataFrame:
         F.expr("try_cast(value AS BIGINT)").alias("v"),
     )
     # ONE aggregation over the full composite key carries every downstream
-    # tally. An eager localCheckpoint materializes it in one job at plan
-    # construction: the corpus is scanned once, and the pipeline below
-    # reads the small composite-key frame (bounded by distinct (crawler,
-    # domain, path) triples, not by input rows) from the block manager.
-    # Measured on a 4-vCPU VM at local[4] (perfbench dfs_stream corpus,
-    # lowered run + pull, median of 5 interleaved reps in one JVM): 1.45 s
-    # with this checkpoint, 1.89 s with ``.cache()`` + ``count()``, 1.39 s
-    # unmaterialized (``trip`` has had one consumer since r15). Unlike
-    # ``.cache()`` it leaves no CacheManager entry in the session; such an
-    # entry would not save work anyway, as every ``Warehouse.store`` to the
-    # input path recaches it by path. The price: the registered
-    # ``mr_log_analyzer`` query recomputes ``trip`` on every call (sf0.1,
-    # local[4]: 1.61 s per call; a session cache entry served repeat calls
-    # in 1.07 s and cold calls in 2.11 s). Rows whose values ALL fail
-    # int-parse keep their r_id here with a NULL total (SUM ignores
-    # nulls), preserving the plugin's zero-count header-only output for
-    # such partitions.
-    trip = (
-        rows.groupBy("r_id", "crawler", "domain", "path")
-        .agg(F.sum("v").alias("cnt"))
-        .localCheckpoint(eager=True)
+    # tally; ``trip`` has one consumer (the pipeline below), so the corpus
+    # is scanned once inside the job and nothing runs at plan
+    # construction. Materializing it first was measured on a 4-vCPU VM at
+    # local[4] (perfbench dfs_stream corpus, lowered run + pull,
+    # interleaved reps in one JVM): an eager ``localCheckpoint`` was no
+    # faster (medians 1.00 vs 1.01 s and 1.12 vs 1.05 s in two sets of 10
+    # reps, with vs without), and ``.cache()`` + ``count()`` was slower
+    # (1.89 vs 1.45 s) and left a CacheManager entry in the session. Rows
+    # whose values ALL fail int-parse keep their r_id here with a NULL
+    # total (SUM ignores nulls), preserving the plugin's zero-count
+    # header-only output for such partitions.
+    trip = rows.groupBy("r_id", "crawler", "domain", "path").agg(
+        F.sum("v").alias("cnt")
     )
     # r15 restructure (guide §2.4 "remove shuffles outright" / §1.2): the
     # previous shape assembled the summary as a UNION of SIX independent
-    # aggregation subtrees over the cached triple frame (dm/cr/ur counts,
+    # aggregation subtrees over the triple frame (dm/cr/ur counts,
     # two windows, header joins) — ~12 tiny exchanges and their stage
     # scheduling dominated the query (3.2 s of the 4.9 s total at sf0.1
     # for a 75-row output). Now ONE long-format pipeline: explode each

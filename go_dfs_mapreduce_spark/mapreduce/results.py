@@ -6,11 +6,7 @@ others are still running; the storage node serves the blob from
 
 The Spark-native twin exploits a plan fact of the HOT reduce paths in
 ``MapReduceJob._plan``: each r_id's rows live in exactly one output
-partition — the Arrow path is ``groupBy("r_id").applyInPandas`` (hash
-exchange on r_id; a group is never split), the ``PerKeyIntSumFormat``
-lowering ends in a ``Window.partitionBy("r_id")`` rank forcing the same
-exchange, and the ``ReduceExpr`` lowerings end in an explicit r_id
-repartition. Where that holds, the driver pulls result partitions as
+partition. Where that holds, the driver pulls result partitions as
 CONCURRENT single-partition jobs from a bounded thread pool and writes
 every reducer file in a partition the moment that partition's job
 returns. Reducers therefore EXECUTE in parallel (the reference schedules
@@ -34,11 +30,23 @@ reference's latency profile. Design points:
   that but serialize reducer execution (measured: a 6 s straggler in
   the first-drained partition delayed every other blob behind it); the
   bounded pool gives both properties.
-- AQE partition coalescing is pinned OFF for the pull's plan: it would
-  merge small reducers into one task, collapsing the per-reducer pull
-  back into a batch (measured: a 6 s straggler delayed every blob to
-  job end at gate sizes). At real output sizes coalescing is a no-op
-  anyway — the advisory partition size keeps big reducers separate.
+- One r_id per partition comes from the plan, not from session conf;
+  the pull sets no conf value, so a caller sharing the session keeps
+  AQE coalescing on every other stage. Per reduce path:
+  - Arrow reduce: ``repartition(R, "r_id").groupBy("r_id")
+    .applyInPandas`` — R reducer partitions. A hash exchange with an
+    explicit partition count (shuffle origin ``REPARTITION_BY_NUM``) is
+    never coalesced by AQE, so a straggler delays only its own
+    partition's blobs.
+  - ``ReduceExpr`` lowerings: the plan ends in the same
+    ``repartition(R, "r_id")``.
+  - ``PerKeyIntSumFormat`` lowering: ends in a
+    ``Window.partitionBy("r_id")`` rank, a plain r_id hash exchange that
+    AQE may coalesce. Coalescing merges whole partitions, so it never
+    splits an r_id: the pull stays correct and streams in coarser
+    pieces. An R-way exchange before the rank made ``mr_wordcount``
+    slower (sf0.1, 4-vCPU VM, local[4], 10 interleaved reps in one JVM:
+    median 0.72 -> 0.75 s, slower in 7 of 10), so it is left out.
 - Driver memory: each pull job STREAMS its partition's rows through the
   job-result socket and the writer appends each row to the reducer file
   as it arrives, so the PYTHON driver holds O(socket buffer) rows
@@ -84,11 +92,12 @@ from pyspark.sql import DataFrame
 
 # concurrent single-partition pull jobs; a cluster scheduler treats them
 # as ordinary FIFO jobs. The pool size is flat where measured (4-vCPU VM,
-# local[4], perfbench dfs_stream corpus, inverted_index pull, median of 5
-# interleaved reps in one JVM): 8 -> 2.65 s, 4 -> 2.90 s. An earlier probe
-# on the same box found skipping empty result partitions flat as well
-# (2.58 s vs 2.72 s), so the default stays 8 and empty partitions are
-# pulled like the rest. Also the JVM-side memory bound: at most this
+# local[4], perfbench dfs_stream corpus, inverted_index run + pull over
+# its R=26 reducer partitions, median of 5 interleaved reps in one JVM):
+# 8 -> 1.27 s, 4 -> 1.31 s. An earlier probe on the same box found
+# skipping empty result partitions flat as well (2.58 s vs 2.72 s, before
+# the R-way reduce exchange), so the default stays 8 and empty partitions
+# are pulled like the rest. Also the JVM-side memory bound: at most this
 # many partitions' serialized bytes are in flight at once (the Python
 # side streams row-at-a-time either way). Overridable per deployment via
 # GO_DFS_MR_PULL_POOL.
@@ -152,18 +161,11 @@ def stream_reducer_results(
     # narrow per-partition sort: groups become contiguous and seq-ordered
     # without an exchange, so partition-at-a-time laziness is preserved
     stream = result.sortWithinPartitions("r_id", "seq")
-    spark = result.sparkSession
-    sc = spark.sparkContext
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce_key)
-    spark.conf.set(coalesce_key, "false")
+    sc = result.sparkSession.sparkContext
     try:
-        try:
-            return _drain(stream.rdd, sc, out_dir, on_complete)
-        except _SplitReducer:
-            return _ordered_drain(result, out_dir, on_complete)
-    finally:
-        spark.conf.set(coalesce_key, prev)
+        return _drain(stream.rdd, sc, out_dir, on_complete)
+    except _SplitReducer:
+        return _ordered_drain(result, out_dir, on_complete)
 
 
 def _drain(rdd, sc, out_dir, on_complete) -> list[int]:

@@ -350,13 +350,12 @@ def stream_dfs_chunk_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    # detach the result from the sink so the per-invocation scratch can
-    # be dropped (repeated gate sweeps must not accrete temp dirs or
-    # sink tables); the emitted set is id+hash rows — metadata-sized
-    rows = spark.table(qname).collect()
-    schema = spark.table(qname).schema
+    # the frame's plan holds the memory sink itself, so it still reads
+    # after the view is dropped (repeated gate sweeps must not accrete
+    # sink tables)
+    out = spark.table(qname)
     spark.catalog.dropTempView(qname)
-    return spark.createDataFrame(rows, schema)
+    return out
 
 
 @query("stream_dfs_chunk_tail_stored", oracle=CHUNK_TAIL_ORACLE)
@@ -566,7 +565,10 @@ def _run_live(spark: SparkSession, sf_dir: str, builder, prefix: str,
     proof of multi-batch execution. State-store commit cost is per
     partition per batch, so shuffle partitions are scoped down around
     start() (measured 32 s -> 17 s on the session query) and restored
-    after. The memory-sink view is dropped on every path; the shared
+    after. The returned frame is the memory sink itself
+    (``spark.table`` resolved before the view is dropped; its plan holds
+    the sink, so no rows are collected into Python and uploaded again),
+    and the memory-sink view is dropped on every path; the shared
     landing dir is session-memoized (``_events_split_dir``) — stale-app
     entries are swept on access and live dirs are removed at
     interpreter exit, so repeated gate sweeps never accrete sink tables
@@ -613,10 +615,7 @@ def _run_live(spark: SparkSession, sf_dir: str, builder, prefix: str,
                 "files) — multi-batch state execution is the point of the "
                 "*_live queries"
             )
-        tbl = spark.table(qname)
-        rows = tbl.collect()  # result-sized (windows/sessions x keys)
-        schema = tbl.schema
-        return spark.createDataFrame(rows, schema)
+        return spark.table(qname)
     finally:
         if started:
             spark.catalog.dropTempView(qname)

@@ -434,13 +434,15 @@ def test_mr_streams_reducer_files_mid_job(spark, tmp_path):
     """Streamed MID-JOB result pull (cl/mr_actions.go:138-219 parity,
     VERDICT r12 #7 / r13 #3): each reducer's file must be complete and
     closed on disk while later reducers are still running. Proven the
-    hard way: the reducer hashed into the LAST-drained shuffle partition
-    REFUSES to produce anything until the first-drained reducer's pulled
-    file exists on disk. If the pull materialized the whole job before
-    writing (the old orderBy + toLocalIterator shape, or any collect),
-    this deadlocks and the gate's timeout fails the test; with genuine
+    hard way: the reducer hashed into the LAST of the R reducer
+    partitions REFUSES to produce anything until the first-drained
+    reducer's pulled file exists on disk. If the pull materialized the
+    whole job before writing (the old orderBy + toLocalIterator shape,
+    or any collect), or if the reducers shared one partition, this
+    deadlocks and the gate's timeout fails the test; with genuine
     partition-at-a-time pulls the sentinel appears in time and every
-    reducer completes."""
+    reducer completes. The session conf is left as it is: the R-way
+    reduce exchange alone keeps the reducers apart."""
     import os
     import time
 
@@ -451,19 +453,19 @@ def test_mr_streams_reducer_files_mid_job(spark, tmp_path):
         stream_reducer_results,
     )
 
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # pmod(hash(r_id), n) is exactly HashPartitioning's routing for the
-    # reduce exchange: drain order across reducers is partition order
+    r = 3
+    # pmod(hash(r_id), R) is exactly HashPartitioning's routing for the
+    # R-way reduce exchange: drain order across reducers is partition order
     part = {
-        r: spark.range(1)
-        .select(F.expr(f"pmod(hash({r}), {n_shuffle})").cast("int"))
+        i: spark.range(1)
+        .select(F.expr(f"pmod(hash({i}), {r})").cast("int"))
         .first()[0]
-        for r in range(3)
+        for i in range(r)
     }
-    free_r = min(part, key=lambda r: (part[r], r))
-    blocked_r = max(part, key=lambda r: (part[r], r))
-    if part[free_r] == part[blocked_r]:
-        pytest.skip("all three reducer ids hash to one shuffle partition")
+    assert part == {0: 0, 1: 1, 2: 0}
+    free_r = min(part, key=lambda i: (part[i], i))
+    blocked_r = max(part, key=lambda i: (part[i], i))
+    assert part[free_r] != part[blocked_r]
     # parity partitioner routing for R=3: first char ord % 3
     key_of = {1: "a", 2: "b", 0: "c"}
     blocked_key = key_of[blocked_r]
@@ -506,16 +508,8 @@ def test_mr_streams_reducer_files_mid_job(spark, tmp_path):
                 pass
         completion_order.append(r_id)
 
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(coalesce_key)
-    spark.conf.set(coalesce_key, "false")  # keep the 3 groups' partitions
-    try:
-        job = MapReduceJob("t_midjob_pull", f_map, f_reduce, r=3)
-        done = stream_reducer_results(
-            job.run(inputs), str(out_dir), on_complete
-        )
-    finally:
-        spark.conf.set(coalesce_key, prev)
+    job = MapReduceJob("t_midjob_pull", f_map, f_reduce, r=r)
+    done = stream_reducer_results(job.run(inputs), str(out_dir), on_complete)
     assert sorted(done) == [0, 1, 2]
     # the blocked reducer can never be FIRST: it waits on the sentinel
     # only a prior completion writes (the on_complete hook above also
@@ -526,8 +520,8 @@ def test_mr_streams_reducer_files_mid_job(spark, tmp_path):
     # a contended box), while the mid-job property this test exists for
     # is already pinned by the sentinel hand-off itself.
     assert completion_order[0] != blocked_r
-    for r, key in key_of.items():
-        assert (out_dir / f"r{r}").read_text() == f"{key}:4\n"
+    for i, key in key_of.items():
+        assert (out_dir / f"r{i}").read_text() == f"{key}:4\n"
 
 
 def test_cli_dfs_daemon_two_cycles_repairs(spark, tmp_path, capsys):
@@ -665,10 +659,13 @@ def test_result_pull_runs_no_python_identity_stage(
     Arrow-path MR job's streamed files must still equal the ordered
     job-end drain byte for byte. The materializing fallback goes through
     ``sc.runJob`` (which calls ``mapPartitions``), so this also pins that
-    the direct path, not the fallback, served the rows."""
+    the direct path, not the fallback, served the rows. Two callers may
+    share one session, so ``RuntimeConfig.set`` raises too: the pull
+    flips no session conf value around its drain."""
     import os
 
     import pyspark.rdd
+    from pyspark.sql.conf import RuntimeConfig
 
     from go_dfs_mapreduce_spark.mapreduce import MapReduceJob
     from go_dfs_mapreduce_spark.mapreduce import results as results_mod
@@ -688,6 +685,9 @@ def test_result_pull_runs_no_python_identity_stage(
     def no_identity_stage(self, *args, **kwargs):
         raise AssertionError("result pull ran a Python mapPartitions stage")
 
+    def no_conf_set(self, *args, **kwargs):
+        raise AssertionError("result pull changed the session conf")
+
     inputs = spark.createDataFrame(
         [("t.txt", i, f"w{i % 7} w{i % 3} x") for i in range(1, 60)],
         "file string, line_number long, line string",
@@ -696,6 +696,7 @@ def test_result_pull_runs_no_python_identity_stage(
         inputs
     )
     monkeypatch.setattr(pyspark.rdd.RDD, "mapPartitions", no_identity_stage)
+    monkeypatch.setattr(RuntimeConfig, "set", no_conf_set)
     streamed, ordered = tmp_path / "streamed", tmp_path / "ordered"
     ordered.mkdir()
     done = results_mod.stream_reducer_results(result, str(streamed))
@@ -873,9 +874,9 @@ def test_mr_cli_lowered_log_analyzer_streams_per_reducer(
 
 def test_lowered_log_analyzer_leaves_no_cached_frame(spark, tmp_path):
     """No query may leave a cached frame in the session: the lowered
-    log_analyzer reduce materializes its composite tally with an eager
-    ``localCheckpoint``, not ``.cache()``, so after the job and its pull
-    the session's CacheManager is empty. The files still equal the
+    log_analyzer reduce runs its composite tally inside the job, with no
+    ``.cache()`` (or any other materialization), so after the job and its
+    pull the session's CacheManager is empty. The files still equal the
     unlowered Arrow reduce (the byte-for-byte pin is
     ``test_mr_cli_lowered_log_analyzer_streams_per_reducer``)."""
     from go_dfs_mapreduce_spark.mapreduce import MapReduceJob, plugins

@@ -212,6 +212,23 @@ def test_partition_wide_reduce_not_per_key(spark):
     assert result == ["ncalls_keys=4"]  # one call, all 4 pairs
 
 
+def test_arrow_reduce_runs_r_reducer_partitions(spark):
+    """The Arrow reduce runs exactly R reducer partitions, as the
+    reference schedules R reducers: one ``hashpartitioning(r_id, R)``
+    exchange (an explicit partition count, which AQE never coalesces)
+    that ``groupBy(r_id)`` reuses, and a row RDD of R partitions."""
+    import re
+
+    r = 5
+    result = MapReduceJob(
+        "t_r_way", plugins.word_count_map, plugins.word_count_reduce, r=r, lower=False
+    ).run(spark.createDataFrame(LINES, INPUT_SCHEMA))
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange hashpartitioning\(r_id#\d+, (\d+)\)", plan)
+    assert exchanges == [str(r)], plan
+    assert result.rdd.getNumPartitions() == r
+
+
 def test_duplicate_running_job_rejected(spark):
     job = MapReduceJob("t_dup", lambda *a: None, lambda *a: None, r=1)
     MapReduceJob._running["t_dup"] = job

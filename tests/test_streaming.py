@@ -457,6 +457,33 @@ def test_stream_dedup_incremental_redelivery_idempotent(spark, monkeypatch):
     assert f"corpus_v{last - 2}" in corpus_dirs_after[last]
 
 
+def test_live_twin_returns_sink_frame(spark, sf_dir, monkeypatch):
+    """A live twin returns its memory sink's own frame: no rows are
+    collected into Python and uploaded again through
+    ``createDataFrame``, the frame reads the same rows on every collect
+    after its view is dropped, and no temporary view is left behind."""
+    from pyspark.sql import SparkSession
+
+    from go_dfs_mapreduce_spark.operators.streaming_batch import (
+        stream_tumbling_counts,
+        stream_tumbling_counts_live,
+    )
+
+    batch = _rows(stream_tumbling_counts(spark, sf_dir))
+
+    def no_upload(self, *args, **kwargs):
+        raise AssertionError("live twin re-uploaded its result rows")
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", no_upload)
+    live = stream_tumbling_counts_live(spark, sf_dir)
+    first = _rows(live)
+    assert first and first == _rows(live) == batch
+    assert not [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("t_tumbling_live")
+    ]
+
+
 def test_chunk_tail_empty_residue_class(spark, tmp_path):
     """A corpus that leaves one doc_id % 4 residue class empty: the chunk
     writer skips the empty partition and numbers remaining chunks
