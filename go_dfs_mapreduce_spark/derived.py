@@ -57,6 +57,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .memo import session_id
+
 # v2: manifest-gated publish + metadata-file-free fingerprints (v1 dirs
 # have no manifest and fold _SUCCESS markers into the fingerprint; the
 # version bump retires them cleanly — they age out via the normal GC)
@@ -312,11 +314,11 @@ def derived_table(
     return _read_back(spark, dst)
 
 
-# read-back memo: unexecuted reader plans keyed by (applicationId, version
-# dir). Version dirs are content-addressed (name embeds the source
+# read-back memo: unexecuted reader plans keyed by (applicationId, session
+# id, version dir). Version dirs are content-addressed (name embeds the source
 # fingerprint) and manifest-gated, so their data files never change after
 # publish; a new corpus version resolves to a different dir and misses.
-_READBACK_MEMO: dict[tuple[str, str], DataFrame] = {}
+_READBACK_MEMO: dict[tuple, DataFrame] = {}
 
 # on-disk bytes of derived table per spread partition. Parquet of these
 # tables deserializes ~6x larger in cache, so 128 KiB on disk ~ 0.8 MB of
@@ -348,10 +350,13 @@ def _read_back(spark: SparkSession, dst: str) -> DataFrame:
         dir_mtime = os.stat(dst).st_mtime_ns
     except OSError:
         dir_mtime = 0
-    key = (app, dst, dir_mtime)
+    sess = session_id(spark)
+    key = (app, sess, dst, dir_mtime)
     df = _READBACK_MEMO.get(key)
     if df is None:
-        for stale in [k for k in _READBACK_MEMO if k[0] != app or k[1] == dst]:
+        for stale in [
+            k for k in _READBACK_MEMO if k[0] != app or k[1:3] == (sess, dst)
+        ]:
             del _READBACK_MEMO[stale]
         df = spark.read.parquet(dst).repartition(
             _spread_partitions(spark, dst)

@@ -17,6 +17,14 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
+def session_id(spark: SparkSession) -> str:
+    """The JVM session's UUID. ``newSession()`` siblings share the
+    applicationId but not their confs, temp views or UDFs, so a lazy
+    plan memoized for one session must be keyed apart from its
+    siblings' (a plan runs under the session that built it)."""
+    return spark._jsparkSession.sessionUUID()
+
+
 def session_memo(
     memo: dict[tuple, DataFrame],
     spark: SparkSession,

@@ -1161,13 +1161,6 @@ WHERE rn = 1
 """
 
 
-def _exploded_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
-    return emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("i", "vf")
-    ).select("vec_id", "label", "i", F.col("vf").cast("double").alias("v"))
-
-
 # Exact-decimal inner products over ARRAY columns: zip_with multiplies in
 # double (exact for float inputs), casts each term to DECIMAL(28,18), and
 # aggregate() adds them sequentially in DECIMAL(38,18) — exact, so the

@@ -465,172 +465,6 @@ def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# MinHash fast twin of common-neighbors: VERDICT r10 #8's structural
-# attempt — estimate |N(u) ∩ N(v)| from adjacency-set signatures instead
-# of enumerating Sum C(d,2) wedges
-# --------------------------------------------------------------------------
-
-CN_MH_K = 48           # minhash lanes (12 md5 digests x 4 lanes each)
-CN_MH_BUCKET_CAP = 256  # hot-bucket cap on the r=1 candidate buckets
-
-
-def common_neighbors_minhash_topk_from_edges(
-    edges: DataFrame,
-    cap: int = CN_APEX_CAP,
-    k: int = CN_TOPK,
-    n_lanes: int = CN_MH_K,
-    bucket_cap: int = CN_MH_BUCKET_CAP,
-) -> DataFrame:
-    """APPROXIMATE common-neighbor top-k from minhash signatures of the
-    (hub-capped) adjacency sets — the r10 verdict's suggested structural
-    attempt at dodging the exact operator's combine-proof 148M-wedge
-    exchange, kept as a MEASURED NEGATIVE RESULT (SCALE.md round 11:
-    36 s vs 15.4 s exact at sf0.01 with recall@50 = 0.02). Per node,
-    ``n_lanes`` minhashes over N'(u) = {w adj u : deg(w) <= cap} (the
-    exact operator's apex cap restated on the element side — same md5
-    lane carving as ``dedup.py``); candidate pairs share ANY single
-    lane value (r=1, OR over lanes); each candidate estimates
-    J = matches / n_lanes over the full signatures in-row and ranks by
-    cn_est = m * (|A|+|B|) / (n_lanes + m), the Jaccard->intersection
-    identity. Non-edges only, like the exact twin.
-
-    Why it loses on THIS graph shape (the closing analysis): the
-    dense-regular graph's true top-50 pairs sit at J ~ 0.15-0.3, where
-    a K-lane estimate carries std sqrt(J(1-J)/K) ~ 0.06 — and ranking
-    ~10^5-10^8 candidates by a noisy estimate surfaces the upper TAIL
-    OF THE ERROR, not the true top (selection bias; measured recall
-    0.02). Tightening banding to r=2 caps true-top collision at
-    1-(1-J^2)^24 = 62-91% while the signature join still moves
-    multi-GB at sf0.1, and an exact-verify stage on the estimate's
-    top-T inherits the same tail problem at the T boundary. The exact
-    operator's Sum C(d,2) wedge exchange (quantified combine-proof in
-    the r7 sweep) stands as the honest cost."""
-    deg = _degrees(edges)
-    hubs = deg.where(F.col("d") > cap).select("pk")
-    fwd = edges.join(
-        F.broadcast(hubs.withColumnRenamed("pk", "u")), "u", "left_anti"
-    ).select(F.col("u").alias("w"), F.col("v").alias("node"))
-    rev = edges.join(
-        F.broadcast(hubs.withColumnRenamed("pk", "v")), "v", "left_anti"
-    ).select(F.col("v").alias("w"), F.col("u").alias("node"))
-    # N'(node) as one array row per node — the dedup _shingle_arrays
-    # shape: one corpus exchange, then every hash is in-row
-    sets_ = (
-        fwd.unionAll(rev)
-        .groupBy("node")
-        .agg(F.collect_set("w").alias("ws"))
-    )
-    n_digests = (n_lanes + 3) // 4
-    lanes = F.expr(
-        "transform(ws, s -> flatten(transform(array("
-        + ", ".join(
-            f"md5(concat('{j}:', cast(s as string)))"
-            for j in range(n_digests)
-        )
-        + "), h -> array("
-        + ", ".join(
-            f"cast(conv(substr(h, {1 + 8 * j}, 8), 16, 10) as bigint)"
-            for j in range(4)
-        )
-        + "))))"
-    )
-    sig = F.expr(
-        f"transform(sequence(0, {n_lanes - 1}),"
-        " i -> array_min(transform(lanes, l -> element_at(l, i + 1))))"
-    )
-    sigs = (
-        sets_.select(
-            "node", F.size("ws").alias("d"), lanes.alias("lanes")
-        )
-        .select("node", "d", sig.alias("sig"))
-        .persist()
-    )
-    # r=1 candidates: bucket per (lane, value), expand in-bucket pairs
-    # row-locally (the dedup bucket-expansion shape) under a hot-bucket
-    # cap — a lane value minhashed by many nodes would otherwise expand
-    # quadratically, and a dropped hot bucket costs little recall with
-    # 47 other lanes voting
-    buckets = (
-        sigs.select(
-            "node", F.posexplode("sig").alias("lane", "mh")
-        )
-        .groupBy("lane", "mh")
-        .agg(F.slice(F.array_sort(F.collect_list("node")), 1, bucket_cap).alias("ds"))
-        .where(F.size("ds") > 1)
-    )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(1, size(ds) - 1),"
-                    " i -> transform(slice(ds, i + 1, size(ds) - i),"
-                    " d -> struct(element_at(ds, i) AS p1, d AS p2))))"
-                )
-            ).alias("p")
-        )
-        .select("p.p1", "p.p2")
-        .distinct()
-    )
-    a = sigs.select(
-        F.col("node").alias("p1"),
-        F.col("d").alias("da"),
-        F.col("sig").alias("sa"),
-    )
-    b = sigs.select(
-        F.col("node").alias("p2"),
-        F.col("d").alias("db"),
-        F.col("sig").alias("sb"),
-    )
-    m_expr = F.expr(
-        "aggregate(zip_with(sa, sb, (x, y) -> IF(x = y, 1, 0)),"
-        " 0, (acc, v) -> acc + v)"
-    )
-    scored = (
-        cand.join(a, "p1")
-        .join(b, "p2")
-        .select(
-            "p1",
-            "p2",
-            m_expr.alias("m"),
-            (F.col("da") + F.col("db")).alias("dsum"),
-        )
-        .where(F.col("m") > 0)
-    )
-    nonedges = scored.join(
-        edges,
-        (scored.p1 == edges.u) & (scored.p2 == edges.v),
-        "left_anti",
-    )
-    est = (
-        F.col("m").cast("double")
-        * F.col("dsum").cast("double")
-        / (F.lit(float(n_lanes)) + F.col("m").cast("double"))
-    )
-    topk = (
-        nonedges.select(
-            F.col("p1").alias("part_a"),
-            F.col("p2").alias("part_b"),
-            F.round(est, 4).alias("cn_est"),
-        )
-        .orderBy(F.desc("cn_est"), "part_a", "part_b")
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("cn_est"), "part_a", "part_b")
-    return topk.withColumn("rank", F.row_number().over(w).cast("int"))
-
-
-def graph_common_neighbors_minhash_topk(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The minhash twin over the co-purchase graph — UNREGISTERED (no
-    oracle, approximate, and a measured dead-end on this graph shape;
-    see ``common_neighbors_minhash_topk_from_edges``): kept so the
-    SCALE.md round-11 closing analysis stays reproducible; estimator
-    sanity is pinned in tests/test_graph.py."""
-    return common_neighbors_minhash_topk_from_edges(_edges(spark, sf_dir))
-
-
-# --------------------------------------------------------------------------
 # PageRank, 2 unrolled iterations, exact integer micro-units
 # --------------------------------------------------------------------------
 

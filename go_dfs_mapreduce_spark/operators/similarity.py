@@ -151,13 +151,13 @@ def ann_int8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     while stage 2 touches float vectors for R rows per query only.
     Stage 1 is INTEGER arithmetic end to end - cross-engine agreement
     is unconditional, no BLAS-ulp caveat (int64 numpy matmul is exact)
-    - so unlike the float fast arms this accelerated path carries a
+    - so unlike a float BLAS kernel this accelerated path carries a
     full-value oracle. Recall vs the exact brute is pinned in tests
     (int8 error ~4e-3 per dim reorders only near-ties; R = 32 >> k = 5
     absorbs them).
 
-    Stage 1 runs as the ``ann_cosine_batch_fast`` map-side-combine
-    shape (r11 verdict finding #2: the old formulation shuffled all
+    Stage 1 runs in the map-side-combine shape for exhaustive scoring
+    (r11 verdict finding #2: the old formulation shuffled all
     n x q scored rows into the per-query window): each Arrow batch is
     scored against the broadcast-closure query matrix with one int64
     matmul and emits only its per-batch top-R partials under the exact
@@ -940,144 +940,6 @@ def ann_cosine_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _brute_topk_impl(spark, sf_dir, N_BATCH_QUERIES)
 
 
-def ann_lsh_batch_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``ann_lsh_batch_topk`` with the candidate SCORING swapped from
-    the exact-decimal fold to a per-query numpy kernel — the
-    ``embedding_nn_cosine_fast`` convention (no oracle: BLAS summation
-    order differs from exact decimal at the last ulp; equivalence to
-    the gate-verified exact twin is asserted in tests/test_llm_ops.py).
-    Candidate generation is byte-identical (shared
-    ``_lsh_candidates``): calibrated width, Hamming-1 multiprobe, the
-    persisted signature index. This is the production arm of the
-    crossover A/B — the decimal fold exists for oracle portability, not
-    for throughput, and the probe separates the index's pruning value
-    from the scoring arithmetic's cost."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    bits = _calibrated_bits_for(spark, sf_dir)
-    cand = _lsh_candidates(
-        spark, sf_dir, multiprobe=True, bits=bits, n_queries=N_BATCH_QUERIES
-    )
-    emb = table(spark, sf_dir, "embeddings")
-    ed = emb.select("vec_id", "embedding")
-    q = ed.where(F.col("vec_id") < N_BATCH_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    )
-    rows = cand.join(ed, cand.cid == ed.vec_id).join(F.broadcast(q), "qid")
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("rank", T.IntegerType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["qid"].iloc[0])
-        ids = pdf["cid"].to_numpy()
-        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        qv = np.asarray(pdf["q_emb"].iloc[0], dtype=np.float64)
-        cos = (mat @ qv) / (
-            np.linalg.norm(mat, axis=1) * np.linalg.norm(qv)
-        )
-        # (cosine desc, cid asc) — sort by cid first, stable-sort by -cos
-        o = np.argsort(ids, kind="stable")
-        o = o[np.argsort(-cos[o], kind="stable")][:TOP_K]
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "neighbor_id": ids[o].astype("int64"),
-                "rank": np.arange(1, len(o) + 1, dtype="int32"),
-                "cosine": np.round(cos[o], 6),
-            }
-        )
-
-    return rows.groupBy("qid").applyInPandas(topk, out_schema)
-
-
-def ann_cosine_batch_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``ann_cosine_batch_topk`` as the production brute arm: one
-    embeddings scan, each Arrow batch scored against the whole query
-    matrix with ONE numpy matmul, per-batch partial top-k emitted
-    (TOP_K x |queries| rows per batch), exact global top-k re-ranked
-    JVM-side over the tiny partials — the map-side-combine shape for
-    exhaustive scoring. The 64 x 64 query matrix rides into the kernel
-    as a closure over a bounded 64-row collect (a constant-size scalar
-    boundary, documented like the 1-row winner checkpoints — NOT a
-    corpus-sized collect). No oracle (BLAS ulp); equivalence to the
-    gate-verified exact twin is asserted in tests/test_llm_ops.py."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    emb = table(spark, sf_dir, "embeddings")
-    qrows = (
-        emb.where(F.col("vec_id") < N_BATCH_QUERIES)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    qmat = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-
-    part_schema = T.StructType(
-        [
-            T.StructField("qid", T.LongType()),
-            T.StructField("cid", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def partial(batches):
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy()
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            cos = (mat @ qmat.T) / np.outer(
-                np.linalg.norm(mat, axis=1), qnorm
-            )
-            outs = []
-            for j in range(len(qids)):
-                col = cos[:, j]
-                mask = ids != qids[j]
-                cids, cj = ids[mask], col[mask]
-                if not len(cids):
-                    continue
-                o = np.argsort(cids, kind="stable")
-                o = o[np.argsort(-cj[o], kind="stable")][:TOP_K]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qids[j],
-                            "cid": cids[o].astype("int64"),
-                            "cosine": cj[o],
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    partials = emb.select("vec_id", "embedding").mapInPandas(
-        partial, part_schema
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc("cosine"), F.asc("cid")
-    )
-    return (
-        partials.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= TOP_K)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("cid").alias("neighbor_id"),
-            F.col("rn").cast("int").alias("rank"),
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
-
-
 def _lsh_candidates(
     spark: SparkSession,
     sf_dir: str,
@@ -1111,8 +973,8 @@ def _lsh_candidates(
       the pruned read skips real I/O, where at fixture scale it can
       only skip task launches it still has to schedule. The probe-key
       collect is a bounded constant-size closure (at most n_queries x
-      LSH_TABLES x (bits+1) int64s), the ``ann_cosine_batch_fast``
-      class."""
+      LSH_TABLES x (bits+1) int64s), like the stage-1 query matrix of
+      ``ann_int8_rerank_topk``."""
     b = LSH_BITS if bits is None else bits
     if bucketed is None:
         bucketed = os.environ.get(
@@ -1221,66 +1083,6 @@ def _lsh_topk_impl(
         # CALIBRATION DERIVATION itself, not just the neighbor sets
         out = out.withColumn("sig_bits", F.lit(b).cast("int"))
     return out
-
-
-# --- fast path: per-block numpy matmul (no oracle — BLAS summation order
-# differs from exact decimal at the last ulp; equivalence to the exact
-# operator is asserted in tests/test_llm_ops.py instead) ------------------
-
-
-def embedding_nn_cosine_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-cell nearest neighbor via one Arrow batch + numpy matmul per
-    block — the throughput shape for the 100 TB path (measured ~10x faster
-    than the decimal-exact join formulation at sf0.1). Same IVF-cell
-    blocking as ``embedding_nn_cosine`` (``dedup.nn_cells``), same tie
-    rule (cosine desc, then neighbor id asc)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .dedup import nn_cells
-
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("nn_vec_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def per_label(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            # a singleton cell has no neighbor; the exact operator drops
-            # the row too (inner pair join)
-            return pd.DataFrame(
-                {"vec_id": [], "nn_vec_id": [], "cosine": []}
-            ).astype({"vec_id": "int64", "nn_vec_id": "int64", "cosine": "float64"})
-        ids = pdf["vec_id"].to_numpy()
-        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        sims = (mat @ mat.T) / np.outer(norms, norms)
-        np.fill_diagonal(sims, -np.inf)
-        order = np.argsort(ids, kind="stable")
-        # ties on cosine broken by smaller neighbor id: argmax over columns
-        # reordered by ascending id returns the first (smallest-id) maximum
-        sims_sorted = sims[:, order]
-        best = np.argmax(sims_sorted, axis=1)
-        return pd.DataFrame(
-            {
-                "vec_id": ids,
-                "nn_vec_id": ids[order][best],
-                "cosine": np.round(sims_sorted[np.arange(len(ids)), best], 6),
-            }
-        )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cells = nn_cells(spark, sf_dir)
-    return (
-        emb.join(cells, "vec_id")
-        .select("vec_id", "embedding", "cell")
-        .groupBy("cell")
-        .applyInPandas(per_label, out_schema)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -2585,8 +2387,8 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# unexecuted ADC plans per (app, sf_dir, embeddings fingerprint) — the
-# r15 reader-plan-memo rule (lazy plans only, nothing caches rows)
+# unexecuted ADC plans per (app, session, sf_dir, embeddings fingerprint) —
+# the r15 reader-plan-memo rule (lazy plans only, nothing caches rows)
 _IVF_PQ_ADC_MEMO: dict[tuple, tuple[DataFrame, int]] = {}
 
 
@@ -2605,10 +2407,12 @@ def _ivf_pq_adc(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     unexecuted DataFrame only, every action still runs the full
     pipeline, and a corpus change misses via the fingerprint."""
     from ..derived import _source_fingerprint
+    from ..memo import session_id
 
     app = spark.sparkContext.applicationId
     key = (
         app,
+        session_id(spark),
         os.path.abspath(sf_dir),
         _source_fingerprint(sf_dir, ("embeddings",)),
     )

@@ -407,14 +407,12 @@ def stream_dfs_chunk_tail_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("stream_first_occurrences", oracle=FIRST_OCCURRENCE_ORACLE)
 def stream_first_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the transformWithStateInPandas first-occurrence
-    detector (streaming/novelty.py::first_occurrences_stream): the
+    """Batch twin of the first-occurrence detector
+    (streaming/novelty.py::first_occurrences_stream_v1): the
     deterministic argmin-(ts, event_id) row per (user_id, event_type).
-    The streaming run keeps seen types in a per-user ListState (or a
-    GroupState array on the protobuf-free applyInPandasWithState path,
-    streaming/novelty.py::first_occurrences_stream_v1) and is proven
-    batching-invariant in tests/test_streaming_novelty.py on whichever
-    engine path the environment supports — zero skips either way."""
+    The streaming run keeps seen types in one GroupState array per user
+    (``applyInPandasWithState``) and is proven batching-invariant in
+    tests/test_streaming_novelty.py."""
     from ..streaming.novelty import first_occurrences_batch
 
     return first_occurrences_batch(table(spark, sf_dir, "events"))

@@ -4,7 +4,6 @@ cn/struct.go:53-187)."""
 
 from .novelty import (
     first_occurrences_batch,
-    first_occurrences_stream,
     first_occurrences_stream_v1,
 )
 from .windows import (
@@ -21,7 +20,6 @@ from .windows import (
 __all__ = [
     "enrich_with_dim",
     "first_occurrences_batch",
-    "first_occurrences_stream",
     "first_occurrences_stream_v1",
     "interval_join",
     "read_events_stream",

@@ -38,24 +38,12 @@ funnel's frozen converted keys there is no dead state to TTL; idle-key
 eviction at 1e9-user scale is an ops policy (processing-time timer on
 last-seen), deliberately not wired here because evicting a live
 baseline silently un-scores the user's next event.
-
-Ships on both arbitrary-state APIs (the repo's convention —
-``novelty.py`` / ``funnel.py``): ``zscore_stream_v1``
-(``applyInPandasWithState``, the path the registered gate query runs)
-and ``ZScoreProcessor`` (``transformWithStateInPandas``); both fold
-through the shared ``_fold_zscore``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from ..operators.timeseries import ZS_MIN_HIST, ZS_WINDOW
 from .stateful import round_half_up_micro
@@ -103,26 +91,6 @@ def _fold_zscore(hist: list[int], chunks: list[pd.DataFrame]):
     return hist, out
 
 
-def _emit(user_id: int, out: list[tuple]):
-    if out:
-        yield pd.DataFrame(
-            [
-                (eid, int(user_id), ts, val, n, vm, s, ss)
-                for eid, ts, val, n, vm, s, ss in out
-            ],
-            columns=[
-                "event_id",
-                "user_id",
-                "ts",
-                "value",
-                "n",
-                "vm",
-                "s",
-                "ss",
-            ],
-        )
-
-
 def _zscore_v1_fn(key, pdf_iter, state):
     """applyInPandasWithState kernel; state = one array<long> ring."""
     (user_id,) = key
@@ -130,7 +98,16 @@ def _zscore_v1_fn(key, pdf_iter, state):
     hist = list(hist)
     hist, out = _fold_zscore(hist, list(pdf_iter))
     state.update((hist,))
-    yield from _emit(user_id, out)
+    if out:
+        yield pd.DataFrame(
+            [
+                (eid, int(user_id), ts, val, n, vm, s, ss)
+                for eid, ts, val, n, vm, s, ss in out
+            ],
+            columns=[
+                "event_id", "user_id", "ts", "value", "n", "vm", "s", "ss"
+            ],
+        )
 
 
 def zscore_stream_v1(events: DataFrame) -> DataFrame:
@@ -145,36 +122,4 @@ def zscore_stream_v1(events: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class ZScoreProcessor(StatefulProcessor):
-    """transformWithStateInPandas variant: same ring buffer as typed
-    ValueState; both paths call ``_fold_zscore``, so semantic equality
-    is by shared construction (the novelty/funnel convention)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._st = handle.getValueState("zscore_hist", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        cur = self._st.get()
-        hist = list(cur[0]) if cur is not None else []
-        hist, out = _fold_zscore(hist, list(rows))
-        self._st.update((hist,))
-        yield from _emit(user_id, out)
-
-    def close(self) -> None:
-        pass
-
-
-def zscore_stream(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas wiring of :class:`ZScoreProcessor`."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        ZScoreProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )

@@ -32,23 +32,12 @@ which the drain tests use.
 State: ONE long (the running statistic) per user — smaller than the
 funnel's 3 longs — and useful for the key's whole lifetime (no dead
 state to TTL; the z-score module's eviction-policy note applies).
-
-Ships on both arbitrary-state APIs (the repo convention):
-``cusum_stream_v1`` (``applyInPandasWithState`` — the registered gate
-path) and ``CusumProcessor`` (``transformWithStateInPandas``); both
-fold through the shared ``_fold_cusum``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from ..operators.timeseries import CUSUM_ALARM_MICRO, CUSUM_TARGET_MICRO
 from .stateful import round_half_up_micro
@@ -86,20 +75,16 @@ def _fold_cusum(s: int, chunks: list[pd.DataFrame], user_id: int):
     return s, out
 
 
-def _emit(out: list[tuple]):
-    if out:
-        yield pd.DataFrame(
-            out, columns=["user_id", "ts", "event_id", "cusum_micro"]
-        )
-
-
 def _cusum_v1_fn(key, pdf_iter, state):
     """applyInPandasWithState kernel; state = one long."""
     (user_id,) = key
     (s,) = state.get if state.exists else (0,)
     s, out = _fold_cusum(int(s), list(pdf_iter), user_id)
     state.update((s,))
-    yield from _emit(out)
+    if out:
+        yield pd.DataFrame(
+            out, columns=["user_id", "ts", "event_id", "cusum_micro"]
+        )
 
 
 def cusum_stream_v1(events: DataFrame) -> DataFrame:
@@ -112,35 +97,4 @@ def cusum_stream_v1(events: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class CusumProcessor(StatefulProcessor):
-    """transformWithStateInPandas variant: same single-long state; both
-    paths call ``_fold_cusum`` (equality by shared construction)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._st = handle.getValueState("cusum_s", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        cur = self._st.get()
-        s = int(cur[0]) if cur is not None else 0
-        s, out = _fold_cusum(s, list(rows), user_id)
-        self._st.update((s,))
-        yield from _emit(out)
-
-    def close(self) -> None:
-        pass
-
-
-def cusum_stream(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas wiring of :class:`CusumProcessor`."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        CusumProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )

@@ -1,13 +1,12 @@
-"""Custom stateful streaming operator via transformWithStateInPandas
-(Spark 4's arbitrary-state API — the successor to applyInPandasWithState
-with typed, composable state primitives and timers).
+"""Custom stateful streaming operator on ``applyInPandasWithState``
+(Spark's arbitrary-state API; the package's one stateful API).
 
 The demo operator is a per-user FIRST-OCCURRENCE detector: emit an event
 only the first time its (user_id, event_type) combination is ever seen —
 the streaming-dedup shape a training-data pipeline uses to build "new
-behavior" feeds. Seen types live in a ListState per user; output is
-append-only (a first occurrence is never revised), so state never needs
-rewriting once a type is recorded.
+behavior" feeds. Seen types live in one ``array<string>`` GroupState row
+per user; output is append-only (a first occurrence is never revised),
+so a recorded type never leaves the state.
 
 Batch-checkability (same strategy as the window surface): after
 processing ALL input, the emitted rows must equal the batch twin
@@ -25,34 +24,23 @@ within each batch), so a late-arriving earlier-ts event loses to the
 already-emitted row; equality with the batch twin's min-ts argmin holds
 on event-time-nondecreasing feeds, which the drain tests use.
 
-Scale: state is one small list per user (bounded by the event-type
+Scale: state is one small array per user (bounded by the event-type
 vocabulary, NOT the stream length), partitioned by user_id in the state
-store; at 100 TB the state store shuffles once on user_id and each list
-stays a few strings. timeMode="None" because first-ever semantics never
-expire; a TTL variant is one ``ttlDurationMs`` argument away.
+store; at 100 TB the state store shuffles once on user_id and each array
+stays a few strings. ``GroupStateTimeout.NoTimeout`` because first-ever
+semantics never expire.
 
-Runtime dependency: Spark's transformWithStateInPandas driver worker
-imports ``google.protobuf`` (its state-server protocol is protobuf over
-a local socket). The SAME operator is therefore also provided on the v1
-arbitrary-state API (``first_occurrences_stream_v1`` via
-``applyInPandasWithState``), which has no protobuf dependency and runs
-the real streaming engine anywhere; the batch twin stays oracle-checked
-either way. tests/test_streaming_novelty.py runs the v1 path end-to-end,
-and drives THIS processor class through a local replay of the engine
-contract when protobuf is absent — zero environment-dependent skips.
+Why only this API: Spark 4's typed-state successor (the
+``transformWithState`` family) talks to its state server in protobuf, so
+it needs ``google.protobuf`` on every worker; ``applyInPandasWithState``
+has no such dependency and runs the real streaming engine anywhere.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 OUTPUT_SCHEMA = (
     "user_id long, event_type string, first_event_id long, first_ts timestamp"
@@ -68,9 +56,8 @@ def _fold_first(seen: set, chunks: list[pd.DataFrame], user_id: int):
     batch twin). Column extraction is vectorized once (the
     ratelimit/sequences pattern — no iterrows, no per-row Series
     construction); only the inherently sequential membership fold runs
-    per event. Returns (newly seen types in first-seen order, verdict
-    rows)."""
-    new_types: list[str] = []
+    per event. Adds the new types to ``seen`` and returns the verdict
+    rows."""
     out = []
     if chunks:
         pdf = pd.concat(chunks, ignore_index=True).sort_values(
@@ -84,50 +71,16 @@ def _fold_first(seen: set, chunks: list[pd.DataFrame], user_id: int):
             if et in seen:
                 continue
             seen.add(et)
-            new_types.append(et)
             out.append((uid, et, eid, ts))
-    return new_types, out
-
-
-class FirstOccurrenceProcessor(StatefulProcessor):
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getListState("seen_types", "event_type string")
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        seen = {r[0] for r in self._seen.get()}
-        new_types, out = _fold_first(seen, list(rows), user_id)
-        for et in new_types:
-            self._seen.appendValue((et,))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "event_type", "first_event_id", "first_ts"],
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def first_occurrences_stream(events: DataFrame) -> DataFrame:
-    """events (streaming) -> append-only first-occurrence rows."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=FirstOccurrenceProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
+    return out
 
 
 def _first_occurrences_v1_fn(key, pdf_iter, state):
-    """applyInPandasWithState kernel: same semantics as
-    FirstOccurrenceProcessor, with the seen-type set as ONE GroupState row
-    (array<string>) instead of ListState appends."""
+    """applyInPandasWithState kernel: the seen-type set is ONE GroupState
+    row (array<string>), rewritten sorted after each fold."""
     (user_id,) = key
     seen = set((state.get)[0]) if state.exists else set()
-    _, out = _fold_first(seen, list(pdf_iter), user_id)
+    out = _fold_first(seen, list(pdf_iter), user_id)
     state.update((sorted(seen),))
     if out:
         yield pd.DataFrame(
@@ -136,12 +89,9 @@ def _first_occurrences_v1_fn(key, pdf_iter, state):
 
 
 def first_occurrences_stream_v1(events: DataFrame) -> DataFrame:
-    """The same first-occurrence operator on the v1 arbitrary-state API
-    (``applyInPandasWithState``), which has no protobuf dependency — the
-    engine path that runs in protobuf-less environments, and a live
-    demonstration that both state APIs express this operator. State per
+    """events (streaming) -> append-only first-occurrence rows. State per
     user is one array<string> of seen types (bounded by the event-type
-    vocabulary, same as the ListState variant)."""
+    vocabulary)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return events.groupBy("user_id").applyInPandasWithState(

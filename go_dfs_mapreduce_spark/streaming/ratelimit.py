@@ -33,23 +33,12 @@ Numeric story: NO float path. Timestamps quantize to whole epoch
 seconds, balances are micro-token int64, every step (multiply, add, min,
 compare, subtract) is 64-bit integer arithmetic — cross-engine agreement
 is unconditional.
-
-Ships on both arbitrary-state APIs (the repo convention):
-``ratelimit_stream_v1`` (``applyInPandasWithState`` — the registered
-gate path) and ``RateLimitProcessor`` (``transformWithStateInPandas``);
-both fold through the shared ``_fold_bucket``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 RL_CAP_MICRO = 3_000_000        # bucket capacity: 3 tokens
 RL_RATE_MICRO_PER_SEC = 100     # refill: 1 token per 10^4 seconds
@@ -261,37 +250,4 @@ def ratelimit_eventtime_stream(events: DataFrame) -> DataFrame:
         stateStructType=EVENTTIME_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-class RateLimitProcessor(StatefulProcessor):
-    """transformWithStateInPandas variant: same two-long state; both
-    paths call ``_fold_bucket`` (equality by shared construction)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._st = handle.getValueState("bucket", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        cur = self._st.get()
-        bal = int(cur[0]) if cur is not None else None
-        last_t = int(cur[1]) if cur is not None else None
-        bal, last_t, out = _fold_bucket(bal, last_t, list(rows), user_id)
-        if last_t is not None:
-            self._st.update((int(bal), int(last_t)))
-        yield from _emit(out)
-
-    def close(self) -> None:
-        pass
-
-
-def ratelimit_stream(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas wiring of :class:`RateLimitProcessor`."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RateLimitProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )

@@ -23,23 +23,12 @@ State: exactly ``SEQ_K - 1`` strings per user (two, for trigrams) —
 bounded regardless of stream length, no floats anywhere, and useful for
 the key's whole lifetime (no dead state to TTL; the z-score module's
 eviction-policy note applies).
-
-Ships on both arbitrary-state APIs (the repo convention):
-``event_sequences_stream_v1`` (``applyInPandasWithState`` — the
-registered gate path) and ``SequenceProcessor``
-(``transformWithStateInPandas``); both fold through ``_fold_seq``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 from ..operators.mining import SEQ_K
 
@@ -60,7 +49,7 @@ def _fold_seq(p1, p2, chunks: list[pd.DataFrame], user_id: int):
     (measured ~20% on the gate drain — the micro-batch/state-commit
     overhead dominates there, but the fold itself scales to large
     per-key batches where iterrows would not), and the per-row
-    semantics are pinned identical by the tws/v1/batch-truth test."""
+    semantics are pinned identical by the v1/batch-truth test."""
     assert SEQ_K == 3, "state layout is sized for trigrams"
     out = None
     if chunks:
@@ -97,18 +86,14 @@ def _fold_seq(p1, p2, chunks: list[pd.DataFrame], user_id: int):
     return p1, p2, out
 
 
-def _emit(out):
-    if out is not None:
-        yield out
-
-
 def _seq_v1_fn(key, pdf_iter, state):
     """applyInPandasWithState kernel; state = two strings."""
     (user_id,) = key
     (p1, p2) = state.get if state.exists else (None, None)
     p1, p2, out = _fold_seq(p1, p2, list(pdf_iter), user_id)
     state.update((p1, p2))
-    yield from _emit(out)
+    if out is not None:
+        yield out
 
 
 def event_sequences_stream_v1(events: DataFrame) -> DataFrame:
@@ -121,35 +106,4 @@ def event_sequences_stream_v1(events: DataFrame) -> DataFrame:
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class SequenceProcessor(StatefulProcessor):
-    """transformWithStateInPandas variant: same two-string state; both
-    paths call ``_fold_seq`` (equality by shared construction)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._st = handle.getValueState("seq_tail", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        cur = self._st.get()
-        p1, p2 = (cur[0], cur[1]) if cur is not None else (None, None)
-        p1, p2, out = _fold_seq(p1, p2, list(rows), user_id)
-        self._st.update((p1, p2))
-        yield from _emit(out)
-
-    def close(self) -> None:
-        pass
-
-
-def event_sequences_stream(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas wiring of :class:`SequenceProcessor`."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        SequenceProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )

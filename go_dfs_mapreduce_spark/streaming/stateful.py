@@ -1,28 +1,14 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Shared numeric helper for the ``applyInPandasWithState`` kernels.
 
-The shape the brief names for operators Spark's built-in windows can't
-express: arbitrary per-key state evolved batch-by-batch. The demo operator
-keeps a running per-user profile (event count, value sum, last event type,
-last seen ts) and emits an updated row per user per micro-batch.
-
-Batch-checkability: after processing ALL input, the final per-user rows
-must equal a plain groupBy aggregation — tests/test_streaming.py asserts
-exactly that, the same strategy the window surface uses.
-
-Scale: state lives in the state store, partitioned by user_id; eviction is
-the caller's policy (GroupStateTimeout) — here NoTimeout since the test
-corpus is bounded.
+The anomaly and CUSUM kernels fold per-key state in Python and must
+round exactly as the SQL batch twins do; ``round_half_up_micro`` is that
+rounding, kept in one place so both kernels agree with the engines.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 def round_half_up_micro(x: float) -> int:
     """Python twin of the engines' ``ROUND(x * 1e6)`` half-away-from-zero
@@ -36,63 +22,3 @@ def round_half_up_micro(x: float) -> int:
     y = x * 1_000_000.0
     fl = math.floor(y)
     return int(fl) + (1 if y - fl >= 0.5 else 0)
-
-
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_cents", T.LongType()),
-        T.StructField("last_type", T.StringType()),
-        T.StructField("last_ts_micros", T.LongType()),
-    ]
-)
-
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-        T.StructField("last_type", T.StringType()),
-    ]
-)
-
-
-def _update_user_profile(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, cents, last_type, last_ts = state.get
-    else:
-        n, cents, last_type, last_ts = 0, 0, None, -1
-    for pdf in pdfs:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        n += len(pdf)
-        # exact integer cents — float sums would drift across batchings
-        cents += int(round(float(pdf["value"].sum()) * 100))
-        tail = pdf.iloc[-1]
-        ts_micros = int(tail["ts"].value // 1000)
-        if ts_micros >= last_ts:
-            last_ts = ts_micros
-            last_type = str(tail["event_type"])
-    state.update((n, cents, last_type, last_ts))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [n],
-            "total_value": [cents / 100.0],
-            "last_type": [last_type],
-        }
-    )
-
-
-def stateful_user_profiles(events: DataFrame) -> DataFrame:
-    """events (streaming) -> running per-user profile rows, one per user
-    per micro-batch in update mode."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_user_profile,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

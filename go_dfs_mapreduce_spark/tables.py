@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .memo import session_id
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -35,7 +37,9 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # re-infers the schema from the footer — measured ~240 ms of driver-side
 # time PER CALL at sf0.1, paid inside every query builder (a 3-table join
 # paid it three times per invocation). The memo key carries the
-# applicationId (a dead session's plans must not leak into a new one) and
+# applicationId (a dead session's plans must not leak into a new one), the
+# session id (a plan runs under the session that built it, so a
+# ``newSession()`` sibling with its own confs gets its own reader) and
 # the source file's (size, mtime_ns), so a regenerated/appended corpus
 # misses and re-reads. Values are unexecuted plans — every action still
 # scans the parquet input; nothing here caches rows or results.
@@ -56,11 +60,16 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (spark.sparkContext.applicationId, os.path.abspath(path), _table_stat(path))
+    key = (
+        spark.sparkContext.applicationId,
+        session_id(spark),
+        os.path.abspath(path),
+        _table_stat(path),
+    )
     cached = _READER_MEMO.get(key)
     if cached is not None:
         return cached
-    for stale in [k for k in _READER_MEMO if k[:2] == key[:2] and k != key]:
+    for stale in [k for k in _READER_MEMO if k[:3] == key[:3] and k != key]:
         del _READER_MEMO[stale]
     if name == "events":
         # events.parquet stores TIMESTAMP(NANOS), which Spark rejects by

@@ -277,8 +277,9 @@ def test_no_rowwise_python_in_any_registered_query(spark, sf_dir):
         # chunk rows (the chunk scan itself is also a Python DataSource)
         "multimodal_jpeg_metadata_stored",
         # round 12: int8 stage 1 became the declared map-side partial
-        # top-R Arrow kernel (the ann_cosine_batch_fast shape, r11
-        # verdict #8); the quantized recall audit composes it
+        # top-R Arrow kernel (each Arrow batch scored against the query
+        # matrix, only per-batch top-R rows exchanged; r11 verdict #8);
+        # the quantized recall audit composes it
         "ann_int8_rerank_topk",
         "ann_quantized_recall_audit",
         "udf_price_tier",

@@ -334,33 +334,3 @@ def test_cc_labels_handcrafted(spark):
         for r in cc_labels_from_edges(nodes, edges, iters=4).collect()
     }
     assert got3 == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
-
-
-def test_cn_minhash_estimator_sanity_handcrafted(spark):
-    """Estimator sanity for the (unregistered, measured-dead-end) minhash
-    twin on a graph where the answer is unambiguous: nodes 1 and 2 share
-    ALL of nodes 10..29 as neighbors (identical adjacency sets -> all
-    lanes agree -> cn_est = K * 40 / (K + K) = 20 = the true count),
-    node 3 shares nothing with them. The twin must rank (1, 2) first
-    with the exact estimate, and never surface a disjoint pair."""
-    from go_dfs_mapreduce_spark.operators.graph import (
-        CN_MH_K,
-        common_neighbors_minhash_topk_from_edges,
-    )
-
-    rows = []
-    for w in range(10, 30):
-        rows += [(1, w), (2, w)]
-    for w in range(30, 34):
-        rows.append((3, w))
-    edges = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in rows], "u long, v long"
-    ).distinct()
-    got = common_neighbors_minhash_topk_from_edges(edges, k=5).collect()
-    assert got, "no candidates surfaced"
-    top = got[0]
-    assert (top.part_a, top.part_b) == (1, 2)
-    # identical sets: all K lanes agree, the identity is exact
-    assert top.cn_est == round(CN_MH_K * 40 / (2 * CN_MH_K), 4) == 20.0
-    surfaced = {(r.part_a, r.part_b) for r in got}
-    assert (1, 3) not in surfaced and (2, 3) not in surfaced

@@ -201,30 +201,6 @@ def test_simhash_near_dups_have_small_hamming(spark, sf_dir):
             assert ham[pair] <= 8
 
 
-def test_fast_nn_matches_exact_formulation(spark, sf_dir):
-    """numpy fast path == decimal-exact join formulation (neighbor ids
-    must agree everywhere; cosines within 1e-9 — BLAS vs exact-decimal
-    summation differ only in the last ulp)."""
-    from go_dfs_mapreduce_spark.operators.dedup import embedding_nn_cosine
-    from go_dfs_mapreduce_spark.operators.similarity import (
-        embedding_nn_cosine_fast,
-    )
-
-    exact = {
-        r.vec_id: (r.nn_vec_id, r.cosine)
-        for r in embedding_nn_cosine(spark, sf_dir).collect()
-    }
-    fast = {
-        r.vec_id: (r.nn_vec_id, r.cosine)
-        for r in embedding_nn_cosine_fast(spark, sf_dir).collect()
-    }
-    assert set(fast) == set(exact)
-    for vid, (nn, cos) in exact.items():
-        fnn, fcos = fast[vid]
-        assert fnn == nn, (vid, nn, fnn)
-        assert abs(fcos - cos) < 1e-6
-
-
 def test_image_header_roundtrip_and_garbage():
     from go_dfs_mapreduce_spark.operators.multimodal import (
         make_image_bytes,
@@ -1438,56 +1414,6 @@ def test_calibrated_ivf_consistency(spark, sf_dir):
     assert calibrated_ivf_cells(500) == 32
     assert calibrated_ivf_cells(2000) == 64
     assert calibrated_ivf_cells(50_000) == 256
-
-
-def test_ann_lsh_batch_fast_equivalent_to_exact_twin(spark, sf_dir):
-    """The numpy fast scorer must return the same (query, neighbor)
-    top-k sets as the gate-verified exact-decimal twin, with cosines
-    agreeing to the shared 6-decimal rounding (the
-    embedding_nn_cosine_fast equivalence convention). Ranks may permute
-    only within ties on the rounded cosine."""
-    from collections import defaultdict
-
-    from go_dfs_mapreduce_spark.operators.similarity import (
-        ann_lsh_batch_fast,
-        ann_lsh_batch_topk,
-    )
-
-    exact = defaultdict(dict)
-    for r in ann_lsh_batch_topk(spark, sf_dir).collect():
-        exact[r.query_id][r.neighbor_id] = r.cosine
-    fast = defaultdict(dict)
-    for r in ann_lsh_batch_fast(spark, sf_dir).collect():
-        fast[r.query_id][r.neighbor_id] = r.cosine
-    assert set(exact) == set(fast)
-    for qid in exact:
-        assert set(exact[qid]) == set(fast[qid]), qid
-        for nid, c in exact[qid].items():
-            assert abs(fast[qid][nid] - c) <= 1e-6, (qid, nid)
-
-
-def test_ann_cosine_batch_fast_equivalent_to_exact_twin(spark, sf_dir):
-    """The partial-top-k numpy brute arm must match the gate-verified
-    exact batch brute: same neighbor sets per query, cosines within the
-    shared 6-decimal rounding."""
-    from collections import defaultdict
-
-    from go_dfs_mapreduce_spark.operators.similarity import (
-        ann_cosine_batch_fast,
-        ann_cosine_batch_topk,
-    )
-
-    exact = defaultdict(dict)
-    for r in ann_cosine_batch_topk(spark, sf_dir).collect():
-        exact[r.query_id][r.neighbor_id] = r.cosine
-    fast = defaultdict(dict)
-    for r in ann_cosine_batch_fast(spark, sf_dir).collect():
-        fast[r.query_id][r.neighbor_id] = r.cosine
-    assert set(exact) == set(fast)
-    for qid in exact:
-        assert set(exact[qid]) == set(fast[qid]), qid
-        for nid, c in exact[qid].items():
-            assert abs(fast[qid][nid] - c) <= 1e-6, (qid, nid)
 
 
 def test_token_diversity_handcrafted(spark, tmp_path):

@@ -24,3 +24,50 @@ def test_queries_run_at_smoke_sf(spark, sf_dir):
         df = fn(spark, sf_dir)
         assert df.columns, f"{name} returned no columns"
         df.limit(5).collect()  # executes the plan
+
+
+def test_every_operator_builder_is_registered_or_called():
+    """Reachability guard, no Spark session: every public top-level
+    function in ``operators/*.py`` whose first parameters are
+    ``(spark, sf_dir)`` is either registered in ``registry.QUERIES`` or
+    referenced by name from other package code. A builder that is
+    neither has no oracle, no caller and no gate run."""
+    import ast
+    from pathlib import Path
+
+    from go_dfs_mapreduce_spark import registry
+
+    pkg = Path(registry.__file__).parent
+    queries, _ = registry.collect()
+    registered = {(fn.__module__, fn.__name__) for fn in queries.values()}
+    trees = {p: ast.parse(p.read_text()) for p in pkg.rglob("*.py")}
+
+    def refs_outside(tree, skip):
+        # names and attributes used in the module outside ``skip``
+        out = set()
+        for top in tree.body:
+            if top is not skip:
+                for n in ast.walk(top):
+                    if isinstance(n, ast.Name):
+                        out.add(n.id)
+                    elif isinstance(n, ast.Attribute):
+                        out.add(n.attr)
+        return out
+
+    orphans = []
+    for path in sorted((pkg / "operators").glob("*.py")):
+        mod = f"go_dfs_mapreduce_spark.operators.{path.stem}"
+        for fn in trees[path].body:
+            if (
+                not isinstance(fn, ast.FunctionDef)
+                or fn.name.startswith("_")
+                or [a.arg for a in fn.args.args[:2]] != ["spark", "sf_dir"]
+                or (mod, fn.name) in registered
+            ):
+                continue
+            if not any(
+                fn.name in refs_outside(t, fn if p == path else None)
+                for p, t in trees.items()
+            ):
+                orphans.append(f"{path.stem}.{fn.name}")
+    assert not orphans, f"unregistered, uncalled builders: {orphans}"

@@ -118,51 +118,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert emitted[base] == 1  # event 1 only; late event 3 never merged
 
 
-def test_stateful_user_profiles_converge_to_batch_truth(spark, sf_dir, tmp_path):
-    """applyInPandasWithState across multiple micro-batches: the LAST
-    emitted row per user must equal a plain batch aggregation over all
-    events — state accumulation is batching-invariant."""
-    from pyspark.sql import functions as F
-
-    from go_dfs_mapreduce_spark.streaming.stateful import stateful_user_profiles
-
-    d = tmp_path / "ev"
-    d.mkdir()
-    os.symlink(f"{sf_dir}/events.parquet", d / "events.parquet")
-    stream = read_events_stream(spark, str(d), watermark=None)
-    q = (
-        stateful_user_profiles(stream)
-        .writeStream.format("memory")
-        .queryName("t_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.user_id: (r.n_events, r.total_value, r.last_type)
-        for r in spark.table("t_state").collect()
-    }
-
-    from go_dfs_mapreduce_spark.tables import table
-    from pyspark.sql.window import Window
-
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    want_rows = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("tv"),
-            F.max(F.when(F.col("rn") == 1, F.col("event_type"))).alias("lt"),
-        )
-        .collect()
-    )
-    want = {r.user_id: (r.n, r.tv, r.lt) for r in want_rows}
-    assert got == want
-
-
 def test_streaming_throttle_dedup_matches_batch(spark, sf_dir, events_stream_dir):
     from go_dfs_mapreduce_spark.streaming import throttle_dedup
 
@@ -927,93 +882,6 @@ def test_cusum_kernel_batching_invariant_and_matches_reference():
     assert len(want) >= 1  # the stream actually alarms
 
 
-def test_tws_processors_match_v1_kernels_locally():
-    """The transformWithState wrappers (ZScoreProcessor, CusumProcessor)
-    must emit exactly what their applyInPandasWithState twins emit for
-    the same 3-batch, worst-case-chunked stream — pinning the ValueState
-    get/update plumbing around the shared folds (the novelty/funnel
-    local-harness convention, extended to value state)."""
-    import random
-
-    import pandas as pd
-
-    from go_dfs_mapreduce_spark.streaming import anomaly, cusum
-
-    class _VState:
-        def __init__(self):
-            self._v = None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def clear(self):
-            self._v = None
-
-    class _Handle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, _VState())
-
-    class _FakeGroupState:
-        def __init__(self):
-            self.exists = False
-            self.hasTimedOut = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-            self.exists = True
-
-    rng = random.Random(9)
-    rows = [
-        (i, pd.Timestamp(2024, 1, 1) + pd.Timedelta(minutes=i),
-         1 + (i % 3), round(rng.expovariate(1 / 80.0), 2))
-        for i in range(90)
-    ]
-    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "value"])
-    cut = [0, 30, 60, 90]
-    batches = [pdf.iloc[cut[i]:cut[i + 1]] for i in range(3)]
-
-    def drive(proc_cls, v1_fn):
-        procs, gstates, tws_out, v1_out = {}, {}, [], []
-        for batch in batches:
-            for uid, grp in batch.groupby("user_id"):
-                chunks = [
-                    grp.iloc[[i]].reset_index(drop=True)
-                    for i in range(len(grp) - 1, -1, -1)
-                ]
-                if uid not in procs:
-                    p = proc_cls()
-                    p.init(_Handle())
-                    procs[uid] = p
-                    gstates[uid] = _FakeGroupState()
-                tws_out.extend(
-                    procs[uid].handleInputRows((uid,), iter(chunks), None)
-                )
-                v1_out.extend(
-                    v1_fn((uid,), iter([c.copy() for c in chunks]),
-                          gstates[uid])
-                )
-        key = lambda f: sorted(map(tuple, pd.concat(f).itertuples(False)))  # noqa: E731
-        return (key(tws_out) if tws_out else []), (
-            key(v1_out) if v1_out else []
-        )
-
-    z_tws, z_v1 = drive(anomaly.ZScoreProcessor, anomaly._zscore_v1_fn)
-    assert z_tws == z_v1 and z_tws  # non-empty and identical
-    c_tws, c_v1 = drive(cusum.CusumProcessor, cusum._cusum_v1_fn)
-    assert c_tws == c_v1 and c_tws
-
-
 @pytest.mark.parametrize("kernel", ["zscore", "cusum", "funnel"])
 def test_state_bounds_under_processing_time_soak(spark, tmp_path, kernel):
     """REAL-ENGINE soak of the stateful kernels under a processing-time
@@ -1122,28 +990,13 @@ def test_state_bounds_under_processing_time_soak(spark, tmp_path, kernel):
 
 
 def test_sequences_tws_matches_v1_and_batch_truth():
-    """The streaming trigram emitter: the transformWithState wrapper
-    must emit exactly what the v1 kernel emits for a worst-case-chunked
-    3-batch stream, and both must equal the batch-side ground truth
-    (every contiguous trigram of each user's chronological path)."""
+    """The streaming trigram emitter: the v1 kernel, fed a
+    worst-case-chunked 3-batch stream through a scripted GroupState,
+    must equal the batch-side ground truth (every contiguous trigram of
+    each user's chronological path)."""
     import pandas as pd
 
     from go_dfs_mapreduce_spark.streaming import sequences
-
-    class _VState:
-        def __init__(self):
-            self._v = None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-    class _Handle:
-        def getValueState(self, name, schema):
-            self._s = getattr(self, "_s", _VState())
-            return self._s
 
     class _FakeGroupState:
         def __init__(self):
@@ -1169,29 +1022,21 @@ def test_sequences_tws_matches_v1_and_batch_truth():
     )
     cut = [0, 12, 24, 36]
     batches = [pdf.iloc[cut[i]:cut[i + 1]] for i in range(3)]
-    procs, gstates, tws_out, v1_out = {}, {}, [], []
+    gstates, v1_out = {}, []
     for batch in batches:
         for uid, grp in batch.groupby("user_id"):
             chunks = [
                 grp.iloc[[i]].reset_index(drop=True)
                 for i in range(len(grp) - 1, -1, -1)
             ]
-            if uid not in procs:
-                p = sequences.SequenceProcessor()
-                p.init(_Handle())
-                procs[uid] = p
-                gstates[uid] = _FakeGroupState()
-            tws_out.extend(
-                procs[uid].handleInputRows((uid,), iter(chunks), None)
-            )
             v1_out.extend(
                 sequences._seq_v1_fn(
-                    (uid,), iter([c.copy() for c in chunks]), gstates[uid]
+                    (uid,),
+                    iter(chunks),
+                    gstates.setdefault(uid, _FakeGroupState()),
                 )
             )
-    key = lambda f: sorted(map(tuple, pd.concat(f).itertuples(False)))  # noqa: E731
-    got_tws, got_v1 = key(tws_out), key(v1_out)
-    assert got_tws == got_v1 and got_tws
+    got_v1 = sorted(map(tuple, pd.concat(v1_out).itertuples(False)))
     # batch ground truth: contiguous trigrams of each user's ts-ordered path
     want = []
     for uid, grp in pdf.sort_values(["ts", "event_id"]).groupby("user_id"):
@@ -1201,7 +1046,7 @@ def test_sequences_tws_matches_v1_and_batch_truth():
             want.append(
                 (uid, r["ts"], r["event_id"], ">".join(ets[i : i + 3]))
             )
-    assert got_tws == sorted(want)
+    assert got_v1 == sorted(want) and got_v1
 
 
 def test_ratelimit_kernel_batching_invariant_and_matches_reference():
@@ -1267,10 +1112,9 @@ def test_ratelimit_kernel_batching_invariant_and_matches_reference():
 
 
 def test_ratelimit_tws_matches_v1_and_batch_truth():
-    """The transformWithState wrapper must emit exactly what the
-    applyInPandasWithState twin emits for the same worst-case-chunked
-    3-batch stream, and both must equal the single-fold batch truth —
-    pinning the two-long ValueState plumbing around the shared fold."""
+    """The applyInPandasWithState kernel, fed a 3-batch stream through a
+    scripted GroupState, must equal the single-fold batch truth —
+    pinning the two-long state plumbing around the shared fold."""
     import pandas as pd
 
     from go_dfs_mapreduce_spark.streaming import ratelimit as rl
@@ -1305,31 +1149,8 @@ def test_ratelimit_tws_matches_v1_and_batch_truth():
         for f in rl._ratelimit_v1_fn((7,), iter([b]), st):
             v1_out.extend(f.itertuples(index=False, name=None))
 
-    # tws processor across the same batches via a fake handle
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def getValueState(self, name, schema):
-            return FakeValueState()
-
-    proc = rl.RateLimitProcessor()
-    proc.init(FakeHandle())
-    tws_out = []
-    for b in batches:
-        for f in proc.handleInputRows((7,), iter([b]), None):
-            tws_out.extend(f.itertuples(index=False, name=None))
-
     want = [(u, ts, e, a, bal) for (u, ts, e, a, bal) in truth]
     assert v1_out == want
-    assert tws_out == want
 
 
 def test_ratelimit_out_of_order_late_event_no_refund():

@@ -1,33 +1,20 @@
-"""First-occurrence stateful streaming operator, three ways — all of
-which run in THIS container (zero skips):
+"""First-occurrence stateful streaming operator, checked two ways:
 
 1. batch twin sanity (min-ts row per (user_id, event_type));
-2. the v1 arbitrary-state engine path (``applyInPandasWithState``, no
-   protobuf dependency): real streaming queries, single-batch and
-   3-micro-batch splits, must equal the batch twin;
-3. the v2 ``FirstOccurrenceProcessor`` (transformWithStateInPandas)
-   driven through Spark's real engine when protobuf is importable, and
-   otherwise through a faithful local ListState harness that replays the
-   engine contract (per-key state persisted across micro-batches, rows
-   arriving as multiple Arrow chunks) against the REAL processor class.
+2. the ``applyInPandasWithState`` engine path: real streaming queries,
+   single-batch and 3-micro-batch splits, must equal the batch twin, and
+   the kernel itself, driven with a scripted GroupState, never re-emits a
+   type across micro-batches.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import os
 
 import pandas as pd
-import pytest
-
-try:
-    _HAS_PROTOBUF = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:  # no 'google' namespace package at all
-    _HAS_PROTOBUF = False
 
 from go_dfs_mapreduce_spark.streaming import (
     first_occurrences_batch,
-    first_occurrences_stream,
     first_occurrences_stream_v1,
     read_events_stream,
 )
@@ -133,103 +120,29 @@ def test_v1_engine_batching_invariant(spark, sf_dir, tmp_path):
     assert _rows(got) == _rows(first_occurrences_batch(ev))
 
 
-# ---- v2 transformWithState path ------------------------------------------
-
-
-class _LocalListState:
-    """ListState per (state name, grouping key): the two operations the
-    processor uses, with engine semantics (get -> iterator of row tuples,
-    appendValue persists across micro-batches)."""
-
-    def __init__(self) -> None:
-        self._rows: list[tuple] = []
-
-    def get(self):
-        return iter(list(self._rows))
-
-    def appendValue(self, value: tuple) -> None:
-        self._rows.append(tuple(value))
-
-
-class _LocalHandle:
-    def __init__(self, states: dict) -> None:
-        self._states = states
-
-    def getListState(self, name: str, schema: str) -> _LocalListState:
-        return self._states.setdefault(name, _LocalListState())
-
-
-def _drive_processor_locally(proc_cls, batches):
-    """Replay the transformWithState engine contract against the real
-    processor class: one processor+handle per grouping key (state keyed
-    by user), init once, handleInputRows once per micro-batch the key
-    appears in — with the key's rows delivered as MULTIPLE pandas chunks
-    (the engine re-chunks at maxRecordsPerBatch; the processor must
-    concat before its (ts, event_id) sort)."""
-    per_key: dict[int, tuple] = {}
-    out_frames = []
-    for batch in batches:
-        for uid, grp in batch.groupby("user_id"):
-            if uid not in per_key:
-                proc = proc_cls()
-                proc.init(_LocalHandle({}))
-                per_key[uid] = proc
-            proc = per_key[uid]
-            # worst-case chunking: one row per chunk, reversed order
-            chunks = [
-                grp.iloc[[i]].reset_index(drop=True)
-                for i in range(len(grp) - 1, -1, -1)
-            ]
-            out_frames.extend(
-                proc.handleInputRows((uid,), iter(chunks), timerValues=None)
-            )
-    for proc in per_key.values():
-        proc.close()
-    if not out_frames:
-        return pd.DataFrame(
-            columns=["user_id", "event_type", "first_event_id", "first_ts"]
-        )
-    return pd.concat(out_frames, ignore_index=True)
-
-
-def test_v2_processor_first_occurrences_match_batch(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas path. With protobuf: the real engine.
-    Without: the local harness replays the engine contract against the
-    real FirstOccurrenceProcessor — 3 micro-batches, per-row chunking —
-    and the output must still equal the batch twin."""
-    ev = table(spark, sf_dir, "events")
-    want = _rows(first_occurrences_batch(ev))
-    assert want
-    if _HAS_PROTOBUF:
-        stream = _three_way_split_source(spark, ev, tmp_path)
-        got = _rows(_run(first_occurrences_stream(stream), "t_novel_v2"))
-        assert got == want
-    else:
-        from go_dfs_mapreduce_spark.streaming.novelty import (
-            FirstOccurrenceProcessor,
-        )
-
-        pdf = ev.toPandas().sort_values(["ts", "event_id"]).reset_index(drop=True)
-        cut = [0, len(pdf) // 3, 2 * len(pdf) // 3, len(pdf)]
-        batches = [pdf.iloc[cut[i] : cut[i + 1]] for i in range(3)]
-        out = _drive_processor_locally(FirstOccurrenceProcessor, batches)
-        got = sorted(
-            (int(r.user_id), r.event_type, int(r.first_event_id), r.first_ts)
-            for r in out.itertuples()
-        )
-        norm_want = [
-            (u, t, i, pd.Timestamp(ts)) for (u, t, i, ts) in want
-        ]
-        assert got == sorted(norm_want)
-
-
 def test_v2_processor_never_reemits_across_batches():
-    """ListState eviction semantics pinned without Spark: a type emitted
-    in batch 1 must not re-emit in later batches even from a different
-    chunk order; a NEW type for the same user still emits."""
+    """GroupState semantics pinned without Spark: a type emitted in batch
+    1 must not re-emit in later batches even from a different chunk
+    order; a NEW type for the same user still emits. Driven through the
+    v1 kernel with a scripted state object, each batch's rows delivered
+    as one-row chunks in reverse order (the engine re-chunks at
+    maxRecordsPerBatch; the kernel must concat before its sort)."""
     from go_dfs_mapreduce_spark.streaming.novelty import (
-        FirstOccurrenceProcessor,
+        _first_occurrences_v1_fn,
     )
+
+    class FakeState:
+        def __init__(self):
+            self.exists = False
+            self._v = None
+
+        @property
+        def get(self):
+            return self._v
+
+        def update(self, v):
+            self._v = tuple(v)
+            self.exists = True
 
     t0 = pd.Timestamp("2026-01-01")
 
@@ -244,11 +157,16 @@ def test_v2_processor_never_reemits_across_batches():
         _b([(3, 7, "click", t0 + pd.Timedelta(seconds=3)),
             (4, 7, "view", t0 + pd.Timedelta(seconds=4))]),
     ]
-    out = _drive_processor_locally(FirstOccurrenceProcessor, batches)
-    got = [
-        (int(r.user_id), r.event_type, int(r.first_event_id))
-        for r in out.itertuples()
-    ]
+    st = FakeState()
+    got = []
+    for grp in batches:
+        chunks = [grp.iloc[[i]] for i in range(len(grp) - 1, -1, -1)]
+        for out in _first_occurrences_v1_fn((7,), iter(chunks), st):
+            got.extend(
+                (int(r.user_id), r.event_type, int(r.first_event_id))
+                for r in out.itertuples()
+            )
     # click surfaces once with the min-(ts, event_id) row of batch 1;
     # batch 2's click is suppressed by persisted state; view is new
     assert got == [(7, "click", 1), (7, "view", 4)]
+    assert st.get == (["click", "view"],)

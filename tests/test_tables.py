@@ -222,3 +222,19 @@ def test_heavy_decoders_spread_light_decoders_do_not(spark, sf_dir):
     for q in (multimodal_pixels_bmp, multimodal_audio_pcm):
         a = audit_plan(q(spark, sf_dir))
         assert "RoundRobinPartitioning" not in a["plan"], q.__name__
+
+
+def test_sibling_session_gets_its_own_reader(spark, sf_dir):
+    """``newSession()`` siblings share the applicationId but not their
+    confs. ``table`` must hand each session a reader built under that
+    session, so a sibling's shuffle-partition count governs its
+    aggregations instead of the first session's."""
+    table(spark, sf_dir, "orders")  # memoize the first session's reader
+    s2 = spark.newSession()
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    s2.conf.set("spark.sql.shuffle.partitions", "3")
+    d2 = table(s2, sf_dir, "orders")
+    assert d2.sparkSession is s2
+    assert d2.groupBy("o_custkey").count().rdd.getNumPartitions() == 3
+    assert table(s2, sf_dir, "orders") is d2  # still memoized per session
+    assert table(spark, sf_dir, "orders").sparkSession is spark

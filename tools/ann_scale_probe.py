@@ -68,12 +68,17 @@ def main() -> None:
     from go_dfs_mapreduce_spark.operators.similarity import (
         ann_cosine_batch_topk,
         ann_cosine_topk,
+        ann_int8_rerank_topk,
         ann_ivf_calibrated_topk,
         ann_ivf_topk,
         ann_lsh_batch_topk,
         ann_lsh_calibrated_topk,
         ann_lsh_multiprobe_topk,
         ann_lsh_topk,
+        ivf_pq_rerank_topk,
+        ivf_pq_residual_topk,
+        ivf_pq_topk,
+        pq_adc_topk,
     )
 
     ops = {
@@ -89,29 +94,15 @@ def main() -> None:
         # r10 crossover A/B: 64-query batch, index vs exhaustive
         "lsh_batch64": ann_lsh_batch_topk,
         "brute_batch64": ann_cosine_batch_topk,
+        # r11 quantized family
+        "int8_rerank": ann_int8_rerank_topk,
+        "pq_adc": pq_adc_topk,
+        "ivf_pq": ivf_pq_topk,
+        # r12: the complete serve composition (ADC shortlist + exact rerank)
+        "ivf_pq_rerank": ivf_pq_rerank_topk,
+        # r12: the FAISS-default residual encoding
+        "ivf_pq_residual": ivf_pq_residual_topk,
     }
-    from go_dfs_mapreduce_spark.operators.similarity import (  # noqa: E402
-        ann_cosine_batch_fast,
-        ann_int8_rerank_topk,
-        ann_lsh_batch_fast,
-        ivf_pq_rerank_topk,
-        ivf_pq_residual_topk,
-        ivf_pq_topk,
-        pq_adc_topk,
-    )
-
-    # production arms: numpy scoring (equivalence-tested against the
-    # exact twins; no oracle — BLAS ulp)
-    ops["lsh_batch64_fast"] = ann_lsh_batch_fast
-    ops["brute_batch64_fast"] = ann_cosine_batch_fast
-    # r11 quantized family (all gate-verified)
-    ops["int8_rerank"] = ann_int8_rerank_topk
-    ops["pq_adc"] = pq_adc_topk
-    ops["ivf_pq"] = ivf_pq_topk
-    # r12: the complete serve composition (ADC shortlist + exact rerank)
-    ops["ivf_pq_rerank"] = ivf_pq_rerank_topk
-    # r12: the FAISS-default residual encoding
-    ops["ivf_pq_residual"] = ivf_pq_residual_topk
     only = os.environ.get("SPARK_GRAFT_ANN_OPS")
     if only:
         keep = {s.strip() for s in only.split(",")}
