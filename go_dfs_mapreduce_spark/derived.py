@@ -42,9 +42,8 @@ builder's output over ONLY the new files, with the manifest recording
 the generation chain. Any non-additive change — or a builder without a
 delta — takes the full rebuild, which doubles as the compaction.
 
-In-memory session caching stays where it was (``memo.session_memo``
-persists the read-back frame per session); this layer only changes what
-a COLD build costs.
+This layer only decides what a COLD build costs; the session's
+persisted handle on a read-back is ``memo.index_table``'s.
 """
 
 from __future__ import annotations
@@ -57,7 +56,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .memo import session_id
+from .memo import plan_memo
 
 # v2: manifest-gated publish + metadata-file-free fingerprints (v1 dirs
 # have no manifest and fold _SUCCESS markers into the fingerprint; the
@@ -258,11 +257,9 @@ def derived_table(
     280-430 ms vs 227-242 ms), while tables big enough to feed heavy
     compute (the 8.1 MB edge list -> 63 estimated splits) still spread
     to every core. Target overridable via SPARK_GRAFT_SPREAD_TARGET_
-    BYTES. The read-back DataFrame is memoized per (session, version
-    dir): version dirs are content-addressed and immutable, and a
-    fresh spark.read.parquet of the same dir costs ~185 ms of driver
-    time per call (file index + footer), paid once per bench rep by
-    every reloading consumer."""
+    BYTES. The read-back plan is memoized: a fresh spark.read.parquet of
+    the same dir costs ~185 ms of driver time per call (file index +
+    footer), paid once per bench rep by every reloading consumer."""
     base = _default_base()
     mode = _fp_mode()
     fp = _source_fingerprint(sf_dir, source_tables, version)
@@ -314,12 +311,6 @@ def derived_table(
     return _read_back(spark, dst)
 
 
-# read-back memo: unexecuted reader plans keyed by (applicationId, session
-# id, version dir). Version dirs are content-addressed (name embeds the source
-# fingerprint) and manifest-gated, so their data files never change after
-# publish; a new corpus version resolves to a different dir and misses.
-_READBACK_MEMO: dict[tuple, DataFrame] = {}
-
 # on-disk bytes of derived table per spread partition. Parquet of these
 # tables deserializes ~6x larger in cache, so 128 KiB on disk ~ 0.8 MB of
 # cached rows per task — below that, task launch dominates the work
@@ -342,7 +333,6 @@ def _spread_partitions(spark: SparkSession, dst: str) -> int:
 
 
 def _read_back(spark: SparkSession, dst: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
     try:
         # a GC'd-then-republished version lands at the SAME path with new
         # part-file names; the dir mtime distinguishes the generations so
@@ -350,19 +340,14 @@ def _read_back(spark: SparkSession, dst: str) -> DataFrame:
         dir_mtime = os.stat(dst).st_mtime_ns
     except OSError:
         dir_mtime = 0
-    sess = session_id(spark)
-    key = (app, sess, dst, dir_mtime)
-    df = _READBACK_MEMO.get(key)
-    if df is None:
-        for stale in [
-            k for k in _READBACK_MEMO if k[0] != app or k[1:3] == (sess, dst)
-        ]:
-            del _READBACK_MEMO[stale]
-        df = spark.read.parquet(dst).repartition(
+    return plan_memo(
+        spark,
+        ("read_back", dst),
+        dir_mtime,
+        lambda: spark.read.parquet(dst).repartition(
             _spread_partitions(spark, dst)
-        )
-        _READBACK_MEMO[key] = df
-    return df
+        ),
+    )
 
 
 def _try_append(

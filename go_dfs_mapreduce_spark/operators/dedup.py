@@ -94,9 +94,6 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ARRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame[doc_id, shs, sz] — each document's DISTINCT shingle set as
     an array column, built with exactly ONE corpus-sized exchange:
@@ -125,10 +122,9 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 redundant corpus passes are the real 100 TB cost. The trade:
     MEMORY_AND_DISK storage of the per-doc arrays (compact vs raw text;
     Spark evicts LRU under pressure) held per distinct input for the
-    session. Memoized per (session, sf dir) via
-    ``memo.session_memo`` so the three LSH-family consumers share ONE
-    materialization per sweep instead of accreting a persisted copy per
-    query invocation.
+    session; the three LSH-family consumers share ONE materialization
+    per sweep instead of accreting a persisted copy per query
+    invocation.
 
     Round 7: also a PERSISTED DERIVED TABLE
     (``derived.derived_table``, content-fingerprinted against
@@ -137,32 +133,19 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1.21 s -> 0.28 s at sf0.1, SCALE.md round-7): the shingle-array
     table is the dedup family's on-disk index, the same artifact the
     streaming incremental dedup already persists per generation."""
-    from ..derived import _source_fingerprint, derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
-    def build_arrays() -> DataFrame:
-        return _doc_shingle_arrays(table(spark, sf_dir, "documents"))
-
-    def build() -> DataFrame:
-        # shingle arrays are per-doc independent: an additive corpus
-        # change appends the new docs' rows (derived.py delta path)
-        return derived_table(
-            spark,
-            sf_dir,
-            "doc_shingle_arrays",
-            ("documents",),
-            build_arrays,
-            delta_build=lambda new_files: _doc_shingle_arrays(
-                spark.read.parquet(*new_files)
-            ),
-        )
-
-    return session_memo(
-        _ARRS_MEMO,
+    # shingle arrays are per-doc independent: an additive corpus change
+    # appends the new docs' rows (derived.py delta path)
+    return index_table(
         spark,
         sf_dir,
-        build,
-        fingerprint=_source_fingerprint(sf_dir, ("documents",)),
+        "doc_shingle_arrays",
+        ("documents",),
+        lambda: _doc_shingle_arrays(table(spark, sf_dir, "documents")),
+        delta_build=lambda new_files: _doc_shingle_arrays(
+            spark.read.parquet(*new_files)
+        ),
     )
 
 
@@ -392,9 +375,6 @@ def _band_buckets(arrs: DataFrame) -> DataFrame:
     )
 
 
-_BAND_SIG_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def band_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSH BAND-SIGNATURE INDEX as a persisted warehouse table
     (``memo.index_table``, VERDICT r13 #1): DataFrame[doc_id, band, sig]
@@ -418,7 +398,6 @@ def band_sig_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _doc_band_sigs(_doc_shingle_arrays(spark.read.parquet(*new_files)))
 
     return index_table(
-        _BAND_SIG_MEMO,
         spark,
         sf_dir,
         "lsh_band_index",
@@ -1189,9 +1168,6 @@ def _dec_sqdist_expr(a: str, b: str) -> str:
     )
 
 
-_CELLS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def nn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame[vec_id, cell] — deterministic IVF-style sub-cell per
     vector: seeds are the ``N_NN_CELLS`` smallest vec_ids per label, every
@@ -1206,15 +1182,14 @@ def nn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cell assignment is the IVF index a production deployment stores
     next to the embedding corpus — built once per corpus version
     (content-fingerprinted against embeddings.parquet), reloaded from
-    parquet by every later session, and session-memoized so both
-    embedding_nn_cosine and semantic_dedup consume ONE materialization
-    per sweep. Consumer plans scan the stored table (two scalars per
-    vector); the seed + decimal-distance + argmin build appears in no
-    query plan after the first build."""
+    parquet by every later session; embedding_nn_cosine and
+    semantic_dedup consume ONE materialization per sweep. Consumer
+    plans scan the stored table (two scalars per vector); the seed +
+    decimal-distance + argmin build appears in no query plan after the
+    first build."""
     from ..memo import index_table
 
     return index_table(
-        _CELLS_MEMO,
         spark,
         sf_dir,
         "ann_ivf_cells",
@@ -1249,7 +1224,7 @@ def _build_nn_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Uniqueness of the ordering struct makes the result deterministic and
     # identical to the oracle's row_number-over-(d2, seed_id) formulation.
     #
-    # PERSISTED + eager (by session_memo): both sides of the within-cell
+    # PERSISTED + eager (by index_table): both sides of the within-cell
     # pair self-join consume this frame, and without the persist each
     # side re-runs the seeds + decimal-distance + argmin pipeline (no
     # ReuseExchange across the differently-pruned copies). The cached
@@ -2470,28 +2445,21 @@ def _doc_pos_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-_POS_SH_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _pos_shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``_doc_pos_shingles`` over the documents table as a PERSISTED
-    derived table + session memo (the ``_shingle_arrays`` rule: the
+    index table (the ``_shingle_arrays`` rule: the
     positional index is the span-dedup family's on-disk artifact, built
     once per corpus version; same size class as the distinct-shingle
     arrays table)."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
-    def build() -> DataFrame:
-        return derived_table(
-            spark,
-            sf_dir,
-            "doc_pos_shingles",
-            ("documents",),
-            lambda: _doc_pos_shingles(table(spark, sf_dir, "documents")),
-        )
-
-    return session_memo(_POS_SH_MEMO, spark, sf_dir, build)
+    return index_table(
+        spark,
+        sf_dir,
+        "doc_pos_shingles",
+        ("documents",),
+        lambda: _doc_pos_shingles(table(spark, sf_dir, "documents")),
+    )
 
 
 def _span_dedup_spans(docs: DataFrame) -> DataFrame:

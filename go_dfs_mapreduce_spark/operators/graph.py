@@ -31,6 +31,7 @@ hash-partitioned, AQE-skew-splittable, no driver-side state.
 
 from __future__ import annotations
 
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,12 +45,6 @@ from ..tables import table
 # --------------------------------------------------------------------------
 
 
-# (session id, sf_dir) -> persisted edge frame: the three graph queries
-# each need the same edge list, and a per-call persist would re-run the
-# lineitem self-join and pin duplicate cache entries across a gate sweep
-_EDGES_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame[u, v] with u < v — distinct co-purchase edges.
 
@@ -59,13 +54,11 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, orientation joins degrees back onto the edges), and
     ReuseExchange never collapses branch-pruned subtrees (SCALE.md) —
     unpersisted, the lineitem self-join + distinct ran 4-5x per query.
-    Memoized per (session, sf dir) so the graph query family shares one
-    materialization per sweep. The edge list is 2 longs per edge
-    (orders of magnitude smaller than the fact table), which is exactly
-    the frame a 100 TB deployment would materialize once before any
-    graph pass. Memoization mechanics (stale-app eviction, clearCache
-    detection, eager populate) live in ``memo.session_memo``, shared
-    with dedup's ``nn_cells``.
+    The graph query family shares one materialization per sweep; a
+    per-call persist would pin duplicate cache entries across a gate
+    sweep. The edge list is 2 longs per edge (orders of magnitude
+    smaller than the fact table), which is exactly the frame a 100 TB
+    deployment would materialize once before any graph pass.
 
     Round 7: the edge list is additionally a PERSISTED DERIVED TABLE
     (``derived.derived_table``, content-fingerprinted against lineitem)
@@ -74,8 +67,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1, SCALE.md round-7). This is the curated feature-table
     pattern a 100 TB deployment uses for any graph built from a fact
     table."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
     def build_edges() -> DataFrame:
         li = (
@@ -96,12 +88,26 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    def build() -> DataFrame:
-        return derived_table(
-            spark, sf_dir, "copurchase_edges", ("lineitem",), build_edges
-        )
+    return index_table(
+        spark, sf_dir, "copurchase_edges", ("lineitem",), build_edges
+    )
 
-    return session_memo(_EDGES_MEMO, spark, sf_dir, build)
+
+def _edges_frame_memo(
+    spark: SparkSession, sf_dir: str, name: str, build
+) -> DataFrame:
+    """A persisted frame derived from the edge list, memoized like the
+    edge list itself (per-call persist would accrete cached frames
+    across gate sweeps) and tokened by the same lineitem fingerprint."""
+    from ..derived import _source_fingerprint
+    from ..memo import frame_memo
+
+    return frame_memo(
+        spark,
+        (name, os.path.abspath(sf_dir)),
+        _source_fingerprint(sf_dir, ("lineitem",)),
+        build,
+    )
 
 
 def _degrees(edges: DataFrame) -> DataFrame:
@@ -162,13 +168,6 @@ LEFT JOIN pernode ON pernode.pk = n.pk
 """
 
 
-# (session id, sf_dir) -> persisted oriented-edge frame, memoized for the
-# registered query like _EDGES_MEMO (per-call persist would accrete
-# cached frames across gate sweeps)
-_OE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_ADJ_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _oriented(edges: DataFrame) -> DataFrame:
     """DataFrame[s, t, dt] — each edge directed from its (degree, id)-
     smaller endpoint, carrying the head's degree for wedge ordering."""
@@ -202,7 +201,7 @@ def triangle_counts_from_edges(
     for the full semantics; split out so tests can drive handcrafted
     graphs). ``edges`` should be persisted+populated by the caller — it
     is consumed along several branch-pruned subtrees. ``oe`` lets the
-    registered query pass a session-memoized oriented-edge frame; direct
+    registered query pass its memoized oriented-edge frame; direct
     (test) callers omit it and get a per-call persist, released with
     their short-lived session."""
     deg = _degrees(edges)
@@ -289,15 +288,15 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedge enumeration at O(m^{3/2}) regardless of hubs. The coefficient
     divides exact integer counts once in IEEE double (portable); nodes
     with degree < 2 report 0.0, not a 0/0."""
-    from ..memo import session_memo
-
     nodes = (
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_partkey").alias("pk"))
         .distinct()
     )
     edges = _edges(spark, sf_dir)
-    oe = session_memo(_OE_MEMO, spark, sf_dir, lambda: _oriented(edges))
+    oe = _edges_frame_memo(
+        spark, sf_dir, "oriented_edges", lambda: _oriented(edges)
+    )
     return triangle_counts_from_edges(nodes, edges, oe=oe)
 
 
@@ -701,8 +700,6 @@ def graph_cc_labels_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     pagerank — its broadcast-degree join re-plans the adjacency side
     anyway — so pagerank keeps its shape; recorded in
     OPTIMIZATION_r15.md.)"""
-    from ..memo import session_memo
-
     edges = _edges(spark, sf_dir)
     nodes = (
         edges.select(F.col("u").alias("pk"))
@@ -720,5 +717,5 @@ def graph_cc_labels_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(P, "src")
         )
 
-    adj = session_memo(_ADJ_MEMO, spark, sf_dir, build_adj)
+    adj = _edges_frame_memo(spark, sf_dir, "adjacency", build_adj)
     return cc_labels_from_edges(nodes, edges, adj=adj)

@@ -610,10 +610,6 @@ LSH_ORACLE = _lsh_oracle(multiprobe=False)
 LSH_MULTIPROBE_ORACLE = _lsh_oracle(multiprobe=True)
 
 
-_SIGS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_CAL_SIGS_MEMOS: dict[int, dict[tuple[str, str], DataFrame]] = {}
-
-
 def lsh_sig_table(
     spark: SparkSession, sf_dir: str, bits: int | None = None
 ) -> DataFrame:
@@ -625,20 +621,17 @@ def lsh_sig_table(
     3.6 s of 7.5 s at sf0.1 — 48 exact-decimal projections x 64 dims per
     vector, BigDecimal-backed on the JVM), and it is a pure function of
     the corpus — exactly what a production SRP deployment materializes
-    once per corpus version and serves lookups from. Memoized per
-    (session, sf dir) so one gate sweep builds it at most once.
+    once per corpus version and serves lookups from.
 
     ``bits=None`` is the legacy fixed-width (LSH_BITS) index; an
     explicit ``bits`` builds the calibrated-width index under its own
     derived-table name (widths are different physical indexes — the
     same way a production SRP deployment versions its index by its
     hyperparameters)."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
     b = LSH_BITS if bits is None else bits
     name = "embedding_lsh_sigs" if bits is None else f"embedding_lsh_sigs_cal{b}"
-    memo = _SIGS_MEMO if bits is None else _CAL_SIGS_MEMOS.setdefault(b, {})
 
     def build() -> DataFrame:
         emb = table(spark, sf_dir, "embeddings")
@@ -646,19 +639,13 @@ def lsh_sig_table(
             "vec_id", F.expr(_lsh_sigs_expr("embedding", b)).alias("sigs")
         )
 
-    return session_memo(
-        memo,
-        spark,
-        sf_dir,
-        lambda: derived_table(spark, sf_dir, name, ("embeddings",), build),
-    )
+    return index_table(spark, sf_dir, name, ("embeddings",), build)
 
 
 # --- bucketed signature index: the 100 TB read path (VERDICT r10 #3) -----
 
 LSH_INDEX_BUCKETS = 1024
 _PK_SHIFT = 16_777_216  # 2^24 > any sig at the ANN_CAL_MAX_BITS=20 ceiling
-_BKT_BUILT: dict[tuple[str, str, int], str] = {}
 
 
 def _pk_expr() -> str:
@@ -690,21 +677,20 @@ def lsh_sig_bucketed(
     buckets, and the index is versioned by (width, corpus fingerprint)
     exactly like ``lsh_sig_table``.
 
-    Deliberately NOT ``session_memo``-persisted: caching the frame
-    would serve the join from an InMemoryTableScan and silently bypass
-    the bucketed file scan this table exists to provide; only the BUILD
-    is memoized (catalog-table existence per session)."""
+    Deliberately NOT a persisted frame: caching it would serve the join
+    from an InMemoryTableScan and silently bypass the bucketed file scan
+    this table exists to provide; only the BUILD is memoized (the
+    catalog table's name per session and corpus version)."""
     import shutil
 
     from ..derived import _source_fingerprint
+    from ..memo import plan_memo
 
     b = LSH_BITS if bits is None else bits
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.abspath(sf_dir), b)
-    name = _BKT_BUILT.get(key)
-    if name is None:
-        fp = _source_fingerprint(sf_dir, ("embeddings",))
-        kind = "fix" if bits is None else "cal"
+    kind = "fix" if bits is None else "cal"
+    fp = _source_fingerprint(sf_dir, ("embeddings",))
+
+    def build() -> str:
         name = f"lsh_sigbkt_{kind}{b}_{fp}"
         if not spark.catalog.tableExists(name):
             # the in-memory catalog forgets tables across sessions while
@@ -739,8 +725,11 @@ def lsh_sig_bucketed(
                 .mode("overwrite")
                 .saveAsTable(name)
             )
-        _BKT_BUILT[key] = name
-    return spark.table(name)
+        return name
+
+    return spark.table(
+        plan_memo(spark, ("lsh_sigbkt", os.path.abspath(sf_dir), b), fp, build)
+    )
 
 
 @query("ann_lsh_topk", oracle=LSH_ORACLE)
@@ -1669,18 +1658,13 @@ WHERE rn <= {TOP_K}
 """
 
 
-_IVF_CENT_MEMOS: dict[int, dict[tuple[str, str], DataFrame]] = {}
-_IVF_CELL_MEMOS: dict[int, dict[tuple[str, str], DataFrame]] = {}
-
-
 def ivf_centroid_table(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """DataFrame[cluster, cm] — the calibrated IVF index's iter-2
     centroid arrays as a k-versioned persisted derived table (the
     ``lsh_sig_table`` pattern: the O(n * k) Lloyd build is offline
     index-build work, paid once per corpus version, never on the warm
     query path)."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
     def build() -> DataFrame:
         emb = table(spark, sf_dir, "embeddings")
@@ -1719,13 +1703,8 @@ def ivf_centroid_table(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             ).alias("cm")
         )
 
-    return session_memo(
-        _IVF_CENT_MEMOS.setdefault(k, {}),
-        spark,
-        sf_dir,
-        lambda: derived_table(
-            spark, sf_dir, f"embedding_ivf_cents_k{k}", ("embeddings",), build
-        ),
+    return index_table(
+        spark, sf_dir, f"embedding_ivf_cents_k{k}", ("embeddings",), build
     )
 
 
@@ -1733,8 +1712,7 @@ def ivf_cell_table(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """DataFrame[vec_id, cluster] — every vector's iter-2 cell
     assignment against ``ivf_centroid_table``, as its own k-versioned
     persisted derived table."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
     def build() -> DataFrame:
         emb = table(spark, sf_dir, "embeddings")
@@ -1749,13 +1727,8 @@ def ivf_cell_table(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             F.expr("min_by(cluster, struct(d2, cluster))").alias("cluster")
         )
 
-    return session_memo(
-        _IVF_CELL_MEMOS.setdefault(k, {}),
-        spark,
-        sf_dir,
-        lambda: derived_table(
-            spark, sf_dir, f"embedding_ivf_cells_k{k}", ("embeddings",), build
-        ),
+    return index_table(
+        spark, sf_dir, f"embedding_ivf_cells_k{k}", ("embeddings",), build
     )
 
 
@@ -2080,10 +2053,6 @@ def _pq_sub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_CB_MEMO: dict[tuple[str, str], DataFrame] = {}
-_PQ_CODES_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def pq_codebook_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrame[m, code, cw] — the trained PQ codebooks as a persisted
     derived table (the ``ivf_centroid_table`` rule, applied per the r11
@@ -2092,8 +2061,7 @@ def pq_codebook_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment trains offline once per corpus version). One seeded
     Lloyd refinement per subspace, deterministic micro-int arithmetic,
     versioned by the (M, K) hyperparameters in the table name."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
     def build() -> DataFrame:
         sub = _pq_sub(spark, sf_dir)
@@ -2135,17 +2103,12 @@ def pq_codebook_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return session_memo(
-        _PQ_CB_MEMO,
+    return index_table(
         spark,
         sf_dir,
-        lambda: derived_table(
-            spark,
-            sf_dir,
-            f"embedding_pq_cb_m{PQ_M}k{PQ_K}",
-            ("embeddings",),
-            build,
-        ),
+        f"embedding_pq_cb_m{PQ_M}k{PQ_K}",
+        ("embeddings",),
+        build,
     )
 
 
@@ -2154,8 +2117,7 @@ def pq_code_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     M codes against ``pq_codebook_table``) as its own persisted derived
     table: this IS the production PQ index, 4 bits per (vector,
     subspace) on disk."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
     def build() -> DataFrame:
         sub = _pq_sub(spark, sf_dir)
@@ -2173,17 +2135,12 @@ def pq_code_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "m", "code")
         )
 
-    return session_memo(
-        _PQ_CODES_MEMO,
+    return index_table(
         spark,
         sf_dir,
-        lambda: derived_table(
-            spark,
-            sf_dir,
-            f"embedding_pq_codes_m{PQ_M}k{PQ_K}",
-            ("embeddings",),
-            build,
-        ),
+        f"embedding_pq_codes_m{PQ_M}k{PQ_K}",
+        ("embeddings",),
+        build,
     )
 
 
@@ -2387,11 +2344,6 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# unexecuted ADC plans per (app, session, sf_dir, embeddings fingerprint) —
-# the r15 reader-plan-memo rule (lazy plans only, nothing caches rows)
-_IVF_PQ_ADC_MEMO: dict[tuple, tuple[DataFrame, int]] = {}
-
-
 def _ivf_pq_adc(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """(adc DataFrame[qid, cid, adc_d2], n_cells) — the shared IVF-PQ
     scoring pipeline: calibrated-cell routing (broadcast probe against
@@ -2401,26 +2353,24 @@ def _ivf_pq_adc(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     shortlist and re-scores it exactly.
 
     r16 (guide §5 — the driver should do almost no work): the returned
-    PLAN is memoized per (session, sf_dir, embeddings fingerprint) —
-    cProfile showed the recall audit building this identical ~0.2 s
-    lineage twice (once per composed consumer); the memo stores the
-    unexecuted DataFrame only, every action still runs the full
-    pipeline, and a corpus change misses via the fingerprint."""
+    PLAN is memoized (tokened by the embeddings fingerprint): cProfile
+    showed the recall audit building this identical ~0.2 s lineage
+    twice (once per composed consumer); every action still runs the
+    full pipeline."""
     from ..derived import _source_fingerprint
-    from ..memo import session_id
+    from ..memo import plan_memo
 
-    app = spark.sparkContext.applicationId
-    key = (
-        app,
-        session_id(spark),
-        os.path.abspath(sf_dir),
+    return plan_memo(
+        spark,
+        ("ivf_pq_adc", os.path.abspath(sf_dir)),
         _source_fingerprint(sf_dir, ("embeddings",)),
+        lambda: _build_ivf_pq_adc(spark, sf_dir),
     )
-    hit = _IVF_PQ_ADC_MEMO.get(key)
-    if hit is not None:
-        return hit
-    for stale in [k for k in _IVF_PQ_ADC_MEMO if k[0] != app]:
-        del _IVF_PQ_ADC_MEMO[stale]
+
+
+def _build_ivf_pq_adc(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int]:
     n = table_row_count(spark, sf_dir, "embeddings")
     k = calibrated_ivf_cells(n)
     emb = table(spark, sf_dir, "embeddings")
@@ -2456,7 +2406,6 @@ def _ivf_pq_adc(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         .groupBy("qid", "cid")
         .agg(F.sum("d2").alias("adc_d2"))
     )
-    _IVF_PQ_ADC_MEMO[key] = (adc, k)
     return adc, k
 
 
@@ -2726,9 +2675,6 @@ def ann_quantized_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ADC lookup tables built per (query, probed cell)
 # --------------------------------------------------------------------------
 
-_PQRES_CB_MEMO: dict[tuple[str, str], DataFrame] = {}
-_PQRES_CODES_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 _SLICE_SUB = (
     f"transform(sequence(0, {PQ_M - 1}),"
     f" m -> slice(rm, m * {PQ_DSUB} + 1, {PQ_DSUB}))"
@@ -2764,8 +2710,7 @@ def pqres_codebook_table(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     seeded Lloyd refinement per subspace, the ``pq_codebook_table``
     recipe applied to ``_res_sub``), persisted and versioned by the
     (M, K, cell-count) hyperparameters."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
     def build() -> DataFrame:
         sub = _res_sub(spark, sf_dir, k).select("vec_id", "m", "sv")
@@ -2803,17 +2748,12 @@ def pqres_codebook_table(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             )
         )
 
-    return session_memo(
-        _PQRES_CB_MEMO,
+    return index_table(
         spark,
         sf_dir,
-        lambda: derived_table(
-            spark,
-            sf_dir,
-            f"embedding_pqres_cb_m{PQ_M}k{PQ_K}_c{k}",
-            ("embeddings",),
-            build,
-        ),
+        f"embedding_pqres_cb_m{PQ_M}k{PQ_K}_c{k}",
+        ("embeddings",),
+        build,
     )
 
 
@@ -2822,8 +2762,7 @@ def pqres_code_table(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     ``pqres_codebook_table``, persisted (4 bits per (vector, subspace)
     on disk — identical footprint to the raw-PQ index; only what the
     codes MEAN differs)."""
-    from ..derived import derived_table
-    from ..memo import session_memo
+    from ..memo import index_table
 
     def build() -> DataFrame:
         sub = _res_sub(spark, sf_dir, k).select("vec_id", "m", "sv")
@@ -2841,17 +2780,12 @@ def pqres_code_table(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             .select("vec_id", "m", "code")
         )
 
-    return session_memo(
-        _PQRES_CODES_MEMO,
+    return index_table(
         spark,
         sf_dir,
-        lambda: derived_table(
-            spark,
-            sf_dir,
-            f"embedding_pqres_codes_m{PQ_M}k{PQ_K}_c{k}",
-            ("embeddings",),
-            build,
-        ),
+        f"embedding_pqres_codes_m{PQ_M}k{PQ_K}_c{k}",
+        ("embeddings",),
+        build,
     )
 
 

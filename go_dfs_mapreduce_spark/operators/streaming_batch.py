@@ -183,7 +183,7 @@ _CHUNK_TAIL_MEMO: dict[tuple, str] = {}
 
 def _evict_stale_fixture_dirs(memo: dict, app: str, dir_of) -> None:
     """Drop (rmtree + del) fixture-memo entries from OTHER (stopped)
-    applications — the ``memo.session_memo`` stale-app sweep applied to
+    applications — the ``memo`` store's stale-app sweep applied to
     the on-disk fixture dirs (ADVICE r15: without it a long-lived
     interpreter restarting sessions accretes one split/chunk dir set per
     app until exit). ``dir_of`` maps a memo value to its directory."""

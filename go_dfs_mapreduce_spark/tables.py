@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .memo import session_id
+from .memo import plan_memo
 
 TABLE_NAMES = (
     "region",
@@ -32,19 +32,6 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# Session-scoped memo of the LAZY reader DataFrames (r15, guide §1.2/§6):
-# every `spark.read.parquet(path)` call builds a fresh InMemoryFileIndex and
-# re-infers the schema from the footer — measured ~240 ms of driver-side
-# time PER CALL at sf0.1, paid inside every query builder (a 3-table join
-# paid it three times per invocation). The memo key carries the
-# applicationId (a dead session's plans must not leak into a new one), the
-# session id (a plan runs under the session that built it, so a
-# ``newSession()`` sibling with its own confs gets its own reader) and
-# the source file's (size, mtime_ns), so a regenerated/appended corpus
-# misses and re-reads. Values are unexecuted plans — every action still
-# scans the parquet input; nothing here caches rows or results.
-_READER_MEMO: dict[tuple, DataFrame] = {}
-
 
 def _table_stat(path: str) -> tuple:
     """(size, mtime_ns) change token of a table path; directories token on
@@ -60,17 +47,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (
-        spark.sparkContext.applicationId,
-        session_id(spark),
-        os.path.abspath(path),
+    # the reader plan is memoized: every `spark.read.parquet(path)` builds
+    # a fresh InMemoryFileIndex and re-infers the schema from the footer,
+    # measured ~240 ms of driver time PER CALL at sf0.1, paid inside every
+    # query builder (a 3-table join paid it three times per invocation)
+    return plan_memo(
+        spark,
+        ("table", os.path.abspath(path)),
         _table_stat(path),
+        lambda: _read_table(spark, path, name),
     )
-    cached = _READER_MEMO.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _READER_MEMO if k[:3] == key[:3] and k != key]:
-        del _READER_MEMO[stale]
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         # events.parquet stores TIMESTAMP(NANOS), which Spark rejects by
         # default. The conf is runtime-settable, and setting it HERE (not
@@ -94,7 +83,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # keeps the wall-clock fields, so rendered values still match
             # DuckDB's naive reading of the same parquet in any session tz.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _READER_MEMO[key] = df
     return df
 
 
@@ -211,15 +199,17 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     scheduling floor + scan) to learn what the footers already state
     (r15, guide §5: the driver should do almost no data work — this is
     metadata, not data). Falls back to ``count()`` for non-parquet or
-    unreadable layouts. Memoized per (session, path, file stat) like the
-    reader plans above, so repeated builder calls in one session don't
-    re-walk footers."""
+    unreadable layouts."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = ("rowcount", os.path.abspath(path), _table_stat(path))
-    hit = _ROWCOUNT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    n = -1
+    return plan_memo(
+        spark,
+        ("rowcount", os.path.abspath(path)),
+        _table_stat(path),
+        lambda: _footer_row_count(spark, sf_dir, name, path),
+    )
+
+
+def _footer_row_count(spark: SparkSession, sf_dir: str, name: str, path: str) -> int:
     try:
         import pyarrow.parquet as pq
 
@@ -229,17 +219,10 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
                 for f in files:
                     if f.endswith(".parquet") and not f.startswith(("_", ".")):
                         n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        else:
-            n = pq.ParquetFile(path).metadata.num_rows
+            return n
+        return pq.ParquetFile(path).metadata.num_rows
     except Exception:
-        n = -1
-    if n < 0:
-        n = table(spark, sf_dir, name).count()
-    _ROWCOUNT_MEMO[key] = n
-    return n
-
-
-_ROWCOUNT_MEMO: dict[tuple, int] = {}
+        return table(spark, sf_dir, name).count()
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:

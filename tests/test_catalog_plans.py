@@ -1750,7 +1750,7 @@ def test_round13_operator_plan_contracts(spark, sf_dir):
 def test_persisted_index_plan_contracts(spark, sf_dir):
     """VERDICT r13 #1/#2: the dedup/ANN/fingerprint indexes are PERSISTED
     WAREHOUSE TABLES (memo.index_table = fingerprinted parquet in the
-    derived warehouse + a session-memoized persisted read-back), and the
+    derived warehouse + a memo.frame_memo persisted read-back), and the
     plans prove it: (a) each index handle's executed plan is an
     InMemoryTableScan whose cached child scans the STORED parquet table
     (warehouse/derived/<name>-<fp>) with zero Python stages — so the
@@ -1759,7 +1759,8 @@ def test_persisted_index_plan_contracts(spark, sf_dir):
     executed plan reads the index through that InMemoryTableScan and is
     itself Python-free. Dropping derived_table breaks the path marker
     (the handle's scan falls back to the raw corpus and the decode
-    reappears); dropping session_memo breaks the InMemoryTableScan."""
+    reappears); dropping frame_memo's persist breaks the
+    InMemoryTableScan."""
     from go_dfs_mapreduce_spark.operators.dedup import (
         band_sig_index,
         dedup_incremental_new_docs,

@@ -8,7 +8,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from go_dfs_mapreduce_spark import derived
+from go_dfs_mapreduce_spark import derived, memo
 
 SF = "/root/testdata/sf0.001"
 
@@ -69,25 +69,14 @@ def test_source_change_invalidates_and_gcs(spark, tmp_path, monkeypatch):
     assert fp1[0] not in fp3
 
 
-def test_edges_roundtrip_matches_direct_build(spark, tmp_path, monkeypatch):
-    """The warehouse read-back of the co-purchase edge list is
-    row-identical to building it straight from lineitem."""
-    monkeypatch.setenv("SPARK_GRAFT_DERIVED_DIR", str(tmp_path / "wh"))
-    import go_dfs_mapreduce_spark.operators.graph as g
-
-    g._EDGES_MEMO.clear()
-    try:
-        via_wh = {(r.u, r.v) for r in g._edges(spark, SF).collect()}
-    finally:
-        g._EDGES_MEMO.clear()
-
+def _direct_edges(spark, sf_dir):
     li = (
-        spark.read.parquet(os.path.join(SF, "lineitem.parquet"))
+        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    direct = {
+    return {
         (r.u, r.v)
         for r in a.join(
             b,
@@ -97,7 +86,37 @@ def test_edges_roundtrip_matches_direct_build(spark, tmp_path, monkeypatch):
         .distinct()
         .collect()
     }
-    assert via_wh == direct and via_wh
+
+
+def test_edges_roundtrip_matches_direct_build(spark, tmp_path, monkeypatch):
+    """The warehouse read-back of the co-purchase edge list is
+    row-identical to building it straight from lineitem."""
+    monkeypatch.setenv("SPARK_GRAFT_DERIVED_DIR", str(tmp_path / "wh"))
+    monkeypatch.setattr(memo, "_STORE", {})
+    import go_dfs_mapreduce_spark.operators.graph as g
+
+    via_wh = {(r.u, r.v) for r in g._edges(spark, SF).collect()}
+    assert via_wh == _direct_edges(spark, SF) and via_wh
+
+
+def test_edges_follow_a_corpus_rewrite_mid_session(spark, tmp_path, monkeypatch):
+    """The session's edge frame is tokened by the lineitem fingerprint:
+    rewriting lineitem to half its rows makes the next ``_edges`` call
+    return the new corpus's edges, with no memo clear."""
+    import pyarrow.parquet as pq
+
+    import go_dfs_mapreduce_spark.operators.graph as g
+
+    monkeypatch.setenv("SPARK_GRAFT_DERIVED_DIR", str(tmp_path / "wh"))
+    src = tmp_path / "sf"
+    src.mkdir()
+    full = pq.read_table(os.path.join(SF, "lineitem.parquet"))
+    pq.write_table(full, src / "lineitem.parquet")
+    before = g._edges(spark, str(src)).count()
+    assert before == len(_direct_edges(spark, str(src)))
+    pq.write_table(full.slice(0, full.num_rows // 2), src / "lineitem.parquet")
+    after = g._edges(spark, str(src)).count()
+    assert after == len(_direct_edges(spark, str(src))) < before
 
 
 def test_cli_derived_ls_and_gc(tmp_path, monkeypatch, capsys):
@@ -324,37 +343,28 @@ def test_band_index_appends_on_ingest(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DERIVED_DIR", str(tmp_path / "wh"))
     src = str(tmp_path / "corpus")
     _mini_corpus(spark, src, 0, 60)
-    dd._BAND_SIG_MEMO.clear()
-    dd._ARRS_MEMO.clear()
-    try:
-        dd.band_sig_index(spark, src).count()
-        _mini_corpus(spark, src, 60, 90)
-        # NO memo.clear(): the session handle is fingerprint-keyed, so
-        # the ingest landing mid-session rolls the cache over by itself
-        got = {tuple(r) for r in dd.band_sig_index(spark, src).collect()}
-        dirs = [
-            d
-            for d in os.listdir(tmp_path / "wh")
-            if d.startswith("lsh_band_index-")
-        ]
-        gens = {
-            derived._read_manifest(str(tmp_path / "wh" / d))["generations"]
-            for d in dirs
-        }
-        assert 2 in gens  # the second version was APPENDED, not rebuilt
-        dd._ARRS_MEMO.clear()
-        want = {
-            tuple(r)
-            for r in dd._doc_band_sigs(
-                dd._doc_shingle_arrays(
-                    spark.read.parquet(os.path.join(src, "documents.parquet"))
-                )
-            ).collect()
-        }
-        assert got == want and got
-    finally:
-        dd._BAND_SIG_MEMO.clear()
-        dd._ARRS_MEMO.clear()
+    dd.band_sig_index(spark, src).count()
+    _mini_corpus(spark, src, 60, 90)
+    # NO memo clear: the session handle is fingerprint-tokened, so the
+    # ingest landing mid-session rolls the cache over by itself
+    got = {tuple(r) for r in dd.band_sig_index(spark, src).collect()}
+    dirs = [
+        d for d in os.listdir(tmp_path / "wh") if d.startswith("lsh_band_index-")
+    ]
+    gens = {
+        derived._read_manifest(str(tmp_path / "wh" / d))["generations"]
+        for d in dirs
+    }
+    assert 2 in gens  # the second version was APPENDED, not rebuilt
+    want = {
+        tuple(r)
+        for r in dd._doc_band_sigs(
+            dd._doc_shingle_arrays(
+                spark.read.parquet(os.path.join(src, "documents.parquet"))
+            )
+        ).collect()
+    }
+    assert got == want and got
 
 
 def test_content_fingerprint_mode(spark, tmp_path, monkeypatch):
@@ -397,41 +407,28 @@ def test_audio_video_indexes_append_on_ingest(spark, tmp_path, monkeypatch):
     _mini_corpus(spark, src, 0, 30)
     docs_pq = os.path.join(src, "documents.parquet")
     cases = [
-        (
-            "audio_landmark_index",
-            mm._AUDIO_FP_MEMO,
-            mm._audio_fp_index,
-            mm._build_audio_fps,
-        ),
+        ("audio_landmark_index", mm._audio_fp_index, mm._build_audio_fps),
         (
             "video_frame_hash_index",
-            mm._FRAME_FP_MEMO,
             mm._video_frame_fingerprints,
             mm._build_frame_fps,
         ),
     ]
-    for memo, accessor, _ in ((m, a, b) for _, m, a, b in cases):
-        memo.clear()
+    for _, accessor, _ in cases:
         accessor(spark, src).count()
     _mini_corpus(spark, src, 30, 45)
-    try:
-        for name, memo, accessor, builder in cases:
-            memo.clear()  # new corpus version = new session view
-            got = {tuple(r) for r in accessor(spark, src).collect()}
-            want = {
-                tuple(r)
-                for r in builder(spark.read.parquet(docs_pq)).collect()
-            }
-            assert got == want and got, name
-            gens = {
-                derived._read_manifest(str(tmp_path / "wh" / d))["generations"]
-                for d in os.listdir(tmp_path / "wh")
-                if d.startswith(f"{name}-")
-            }
-            assert 2 in gens, name  # appended, not rebuilt
-    finally:
-        for _, memo, _, _ in cases:
-            memo.clear()
+    for name, accessor, builder in cases:
+        got = {tuple(r) for r in accessor(spark, src).collect()}
+        want = {
+            tuple(r) for r in builder(spark.read.parquet(docs_pq)).collect()
+        }
+        assert got == want and got, name
+        gens = {
+            derived._read_manifest(str(tmp_path / "wh" / d))["generations"]
+            for d in os.listdir(tmp_path / "wh")
+            if d.startswith(f"{name}-")
+        }
+        assert 2 in gens, name  # appended, not rebuilt
 
 
 def test_compact_folds_generations_and_future_appends_work(

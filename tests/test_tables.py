@@ -228,8 +228,15 @@ def test_sibling_session_gets_its_own_reader(spark, sf_dir):
     """``newSession()`` siblings share the applicationId but not their
     confs. ``table`` must hand each session a reader built under that
     session, so a sibling's shuffle-partition count governs its
-    aggregations instead of the first session's."""
+    aggregations instead of the first session's. A persisted memo (the
+    graph edge list) is per session too; the sibling's persist finds the
+    first session's equal plan in Spark's shared CacheManager, so no
+    second copy of its blocks is cached."""
+    from go_dfs_mapreduce_spark.operators.graph import _edges
+
     table(spark, sf_dir, "orders")  # memoize the first session's reader
+    assert _edges(spark, sf_dir).sparkSession is spark
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     s2 = spark.newSession()
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     s2.conf.set("spark.sql.shuffle.partitions", "3")
@@ -238,3 +245,7 @@ def test_sibling_session_gets_its_own_reader(spark, sf_dir):
     assert d2.groupBy("o_custkey").count().rdd.getNumPartitions() == 3
     assert table(s2, sf_dir, "orders") is d2  # still memoized per session
     assert table(spark, sf_dir, "orders").sparkSession is spark
+    e2 = _edges(s2, sf_dir)
+    assert e2.sparkSession is s2 and e2.storageLevel.useMemory
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+

@@ -6,9 +6,8 @@ after r15 changed the read-back repartition from the session core count
 tool re-litigates that change with the bench's own methodology (noop
 sink, clearCache per rep) but INTERLEAVED inside one JVM: ctrl = r14
 shape (repartition to cores), trt = r15 shape (size-derived), alternating
-rep by rep. The read-back memo and the dedup session memos are cleared
-before every rep so each rep rebuilds its arm's plan from the stored
-parquet.
+rep by rep. The session memo store is cleared before every rep so each
+rep rebuilds its arm's plan from the stored parquet.
 
 Usage: python tools/ab_readback_r16.py [--reps 10] [names...]
 """
@@ -35,8 +34,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as mod
-    from go_dfs_mapreduce_spark import derived
-    from go_dfs_mapreduce_spark.operators import dedup
+    from go_dfs_mapreduce_spark import derived, memo
     from go_dfs_mapreduce_spark.session import get_spark
 
     spark = get_spark("ab_readback_r16")
@@ -50,9 +48,7 @@ def main() -> None:
 
     def reset(fn) -> None:
         derived._spread_partitions = fn
-        derived._READBACK_MEMO.clear()
-        dedup._ARRS_MEMO.clear()
-        dedup._BAND_SIG_MEMO.clear()
+        memo._STORE.clear()
 
     # warm codegen/footers at smoke scale, both arms
     from go_dfs_mapreduce_spark.tables import SMOKE_SF_DIR

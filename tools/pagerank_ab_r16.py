@@ -48,8 +48,6 @@ def build(spark, sf_dir, mode: str):
             .repartition(P, "src")
         )
     elif mode == "shared":
-        from go_dfs_mapreduce_spark.memo import session_memo
-
         P = spark.sparkContext.defaultParallelism
 
         def build_adj():
@@ -63,7 +61,7 @@ def build(spark, sf_dir, mode: str):
                 .repartition(P, "src")
             )
 
-        adj = session_memo(G._ADJ_MEMO, spark, sf_dir, build_adj)
+        adj = G._edges_frame_memo(spark, sf_dir, "adjacency", build_adj)
     return G.pagerank_from_edges(nodes, edges, iters=2, adj=adj)
 
 
