@@ -57,6 +57,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .memo import plan_memo
+from .tables import local_bytes
 
 # v2: manifest-gated publish + metadata-file-free fingerprints (v1 dirs
 # have no manifest and fold _SUCCESS markers into the fingerprint; the
@@ -256,10 +257,10 @@ def derived_table(
     med 1000-1524 ms at 32 partitions vs 887-925 ms at 8, populate
     280-430 ms vs 227-242 ms), while tables big enough to feed heavy
     compute (the 8.1 MB edge list -> 63 estimated splits) still spread
-    to every core. Target overridable via SPARK_GRAFT_SPREAD_TARGET_
-    BYTES. The read-back plan is memoized: a fresh spark.read.parquet of
-    the same dir costs ~185 ms of driver time per call (file index +
-    footer), paid once per bench rep by every reloading consumer."""
+    to every core. The read-back plan is memoized: a fresh
+    spark.read.parquet of the same dir costs ~185 ms of driver time per
+    call (file index + footer), paid once per bench rep by every
+    reloading consumer."""
     base = _default_base()
     mode = _fp_mode()
     fp = _source_fingerprint(sf_dir, source_tables, version)
@@ -315,19 +316,11 @@ def derived_table(
 # tables deserializes ~6x larger in cache, so 128 KiB on disk ~ 0.8 MB of
 # cached rows per task — below that, task launch dominates the work
 # (measured, see derived_table docstring).
-_SPREAD_TARGET = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TARGET_BYTES", "") or str(128 * 1024)
-)
+_SPREAD_TARGET = 128 * 1024
 
 
 def _spread_partitions(spark: SparkSession, dst: str) -> int:
-    size = 0
-    try:
-        for f in os.listdir(dst):
-            if not f.startswith(("_", ".")):
-                size += os.path.getsize(os.path.join(dst, f))
-    except OSError:
-        pass
+    size = local_bytes([dst]) or 0
     cores = max(spark.sparkContext.defaultParallelism, 1)
     return max(1, min(cores, (size + _SPREAD_TARGET - 1) // _SPREAD_TARGET))
 

@@ -1,42 +1,17 @@
-"""Skew mitigation: two-stage (salted) aggregation.
+"""Skew mitigation: hot-key salting for an inner equi-join.
 
-For Zipf-skewed keys (exactly what word counts over natural text produce),
-a single groupBy(key) sends every occurrence of a hot key to one reducer.
-Salting splits each key into `n_salts` sub-keys for a first partial
-aggregate, then combines partials in a second, tiny aggregate — bounding
-any single task's share of a hot key to 1/n_salts.
-
-Spark's map-side partial aggregation already does this when the upstream
-operator preserves partitioning, which is why the idiomatic wordcount
-doesn't salt. The utility exists for the shapes where partial aggregation
-can't engage (e.g. directly after a wide transform or with
-spark.sql.aggregate partial disabled) and as the documented pattern for
-AQE-resistant *semantic* skew (SCALE.md).
+For Zipf-skewed keys, a plain shuffle join sends every row of a hot key
+to one task. Salting splits each big-side key into ``n_salts`` sub-keys
+and replicates the small side once per salt, bounding any single task's
+share of a hot key to 1/n_salts. It is the documented pattern for
+AQE-resistant *semantic* skew (SCALE.md); ``salted_join_urgent_lineitems``
+runs it under the plain join's oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_count(
-    df: DataFrame, key: str | Column, n_salts: int = 8, count_alias: str = "cnt"
-) -> DataFrame:
-    """groupBy(key).count() computed via salt -> partial -> combine."""
-    key_col = F.col(key) if isinstance(key, str) else key
-    salted = df.select(
-        key_col.alias("_key"),
-        F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(n_salts)).alias("_salt"),
-    )
-    partial = salted.groupBy("_key", "_salt").agg(
-        F.count(F.lit(1)).alias("_partial")
-    )
-    return (
-        partial.groupBy("_key")
-        .agg(F.sum("_partial").alias(count_alias))
-        .withColumnRenamed("_key", key if isinstance(key, str) else "key")
-    )
 
 
 def salted_join(

@@ -55,10 +55,8 @@ reference's latency profile. Design points:
   them (the same per-partition collect ``toLocalIterator`` does — Spark
   has no public single-partition lazy serve), so the JVM-side bound is
   PULL_POOL x max serialized partition size: at the reference's 64 MiB
-  blob scale ~0.5 GB at the default pool. PULL_POOL is settable via
-  ``GO_DFS_MR_PULL_POOL`` for deployments with bigger reducer outputs;
-  1 reproduces ``toLocalIterator``'s memory profile while keeping
-  finish-order writes.
+  blob scale ~0.5 GB. A pool of 1 would reproduce ``toLocalIterator``'s
+  memory profile while keeping finish-order writes.
 
 The invariant is NOT guaranteed for an arbitrary result frame handed to
 ``stream_reducer_results`` (a round-robin repartition, or a union of
@@ -96,12 +94,11 @@ from pyspark.sql import DataFrame
 # its R=26 reducer partitions, median of 5 interleaved reps in one JVM):
 # 8 -> 1.27 s, 4 -> 1.31 s. An earlier probe on the same box found
 # skipping empty result partitions flat as well (2.58 s vs 2.72 s, before
-# the R-way reduce exchange), so the default stays 8 and empty partitions
+# the R-way reduce exchange), so the pool stays 8 and empty partitions
 # are pulled like the rest. Also the JVM-side memory bound: at most this
 # many partitions' serialized bytes are in flight at once (the Python
-# side streams row-at-a-time either way). Overridable per deployment via
-# GO_DFS_MR_PULL_POOL.
-PULL_POOL = int(os.environ.get("GO_DFS_MR_PULL_POOL", "8") or "8")
+# side streams row-at-a-time either way).
+PULL_POOL = 8
 
 
 def _iter_partition(sc, rdd, p: int):

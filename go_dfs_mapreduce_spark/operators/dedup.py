@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..tables import spread_scan, table
+from ..tables import spread_frame, table
 
 # --- shared normalized-token / shingle builders (Spark + SQL twins) -------
 
@@ -2030,9 +2030,9 @@ def winnow_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r15 (guide §2.5): one md5 PER CHARACTER of normalized text runs
     in-row, pipelined into the gate's single-row-group scan task;
-    spread_scan fans the rows across cores first (no-op at real scale).
+    spread_frame fans the rows across cores first (no-op at real scale).
     Measured 4.3 s -> 1.4 s at sf0.1 (3x)."""
-    docs = spread_scan(spark, sf_dir, "documents", table(spark, sf_dir, "documents"))
+    docs = spread_frame(table(spark, sf_dir, "documents"))
     grams = (
         f"CASE WHEN length(norm) < {WIN_K} THEN array() ELSE "
         f"transform(sequence(1, length(norm) - {WIN_K - 1}),"
@@ -2206,7 +2206,7 @@ def winnow_candidate_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the Arrow boundary, and feeds the same capped-bucket
     equi-join tail as the md5 twin (``_winnow_pairs_from_fps``).
 
-    r15: a spread_scan A/B measured NO win here (1.24 s unspread vs
+    r15: a spread A/B measured NO win here (1.24 s unspread vs
     1.24-1.40 s spread at sf0.1) — the vectorized kernel is cheap enough
     that the capped-bucket join tail dominates, so the scan keeps its
     exchange-free shape (contrast the md5 twin, where hashing dominates

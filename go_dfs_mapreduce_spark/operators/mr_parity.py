@@ -24,13 +24,13 @@ from ..mapreduce.plugins import (
     word_count_reduce,
 )
 from ..registry import query
-from ..tables import spread_scan, table
+from ..tables import spread_frame, table
 
 
 def _documents_as_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents rows as the reference's (file, line_number, line) input
     shape — each document is one text line of its own 'file'."""
-    # UNSPREAD (r16 disposition of the r15 spread_scan probe): the driver
+    # UNSPREAD (r16 disposition of the r15 spread probe): the driver
     # measured mr_wordcount 0.856 -> 0.979 s after r15 added a spread
     # here, and the r16 re-run of the interleaved A/B (10 reps, quiet
     # box, 32 cores) AGREES with the driver — unspread 830 ms vs spread
@@ -158,9 +158,7 @@ WHERE c.rn <= 5
 
 def crawler_log_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthesized crawler log rendered as F1-shaped text lines."""
-    logs = crawler_logs(
-        spark, spread_scan(spark, sf_dir, "events", table(spark, sf_dir, "events"))
-    )
+    logs = crawler_logs(spark, spread_frame(table(spark, sf_dir, "events")))
     return logs.select(
         F.lit("crawler_logs").alias("file"),
         F.col("event_id").cast("long").alias("line_number"),

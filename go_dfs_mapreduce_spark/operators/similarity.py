@@ -276,7 +276,7 @@ def _brute_topk_impl(
     spark: SparkSession, sf_dir: str, n_queries: int
 ) -> DataFrame:
     from .dedup import _dec_dot_expr
-    from ..tables import spread_scan
+    from ..tables import spread_frame
 
     # the per-pair decimal dot folds below are the cost; Spark pipelines
     # them into the scan, and the gate corpus is one row group -> ONE task.
@@ -285,9 +285,7 @@ def _brute_topk_impl(
     # run at full parallelism. Measured r15 (interleaved A/B, 6 reps,
     # sf0.1): median 1623 -> 952 ms, min 1176 -> 711 ms; rows unchanged
     # (round-robin repartition).
-    emb = spread_scan(
-        spark, sf_dir, "embeddings", table(spark, sf_dir, "embeddings")
-    )
+    emb = spread_frame(table(spark, sf_dir, "embeddings"))
     ed = emb.select(
         "vec_id",
         "embedding",
@@ -642,96 +640,6 @@ def lsh_sig_table(
     return index_table(spark, sf_dir, name, ("embeddings",), build)
 
 
-# --- bucketed signature index: the 100 TB read path (VERDICT r10 #3) -----
-
-LSH_INDEX_BUCKETS = 1024
-_PK_SHIFT = 16_777_216  # 2^24 > any sig at the ANN_CAL_MAX_BITS=20 ceiling
-
-
-def _pk_expr() -> str:
-    """THE packed probe-key expression — one definition shared by the
-    index writer and the probe filter (r11 review finding: the
-    pk IN (...) prune is only semantically redundant while both sides
-    compute pk byte-identically; a drifted copy would silently empty
-    the opt-in bucketed candidate set)."""
-    return f"CAST(t AS BIGINT) * {_PK_SHIFT} + CAST(sig AS BIGINT)"
-
-
-def lsh_sig_bucketed(
-    spark: SparkSession, sf_dir: str, bits: int | None = None
-) -> DataFrame:
-    """DataFrame[vec_id, t, sig, pk] — the EXPLODED signature index
-    persisted BUCKETED and SORTED by the packed probe key
-    ``pk = t * 2^24 + sig``, so a candidate lookup's literal
-    ``pk IN (probe keys)`` filter prunes the index READ itself
-    (SelectedBucketsCount in the scan) instead of streaming all
-    n x LSH_TABLES signature rows through the join (the r10 verdict's
-    #3 ask). Within each bucket ``sortBy(pk)`` keeps row groups
-    pk-clustered, so parquet min/max stats prune further when probe
-    keys outnumber buckets (the 64-query batch arm at small widths).
-
-    At the 100 TB design point this is the serve-path shape: bucket
-    count scales with the corpus (here 1024 — at fixture scale the
-    files are tiny, but the PLAN is the one that matters), a single
-    query probes LSH_TABLES x (bits+1) keys and reads only those
-    buckets, and the index is versioned by (width, corpus fingerprint)
-    exactly like ``lsh_sig_table``.
-
-    Deliberately NOT a persisted frame: caching it would serve the join
-    from an InMemoryTableScan and silently bypass the bucketed file scan
-    this table exists to provide; only the BUILD is memoized (the
-    catalog table's name per session and corpus version)."""
-    import shutil
-
-    from ..derived import _source_fingerprint
-    from ..memo import plan_memo
-
-    b = LSH_BITS if bits is None else bits
-    kind = "fix" if bits is None else "cal"
-    fp = _source_fingerprint(sf_dir, ("embeddings",))
-
-    def build() -> str:
-        name = f"lsh_sigbkt_{kind}{b}_{fp}"
-        if not spark.catalog.tableExists(name):
-            # the in-memory catalog forgets tables across sessions while
-            # their managed directories survive in the warehouse dir —
-            # clear leftovers so saveAsTable never trips over a
-            # non-empty location. Only UNREGISTERED directories are
-            # GC'd: a same-prefix sibling still in this session's
-            # catalog (same kind/bits, different corpus fingerprint) is
-            # live and must survive (r11 review finding — the old
-            # prefix-wide rmtree deleted data out from under it)
-            wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-                "file:"
-            )
-            prefix = f"lsh_sigbkt_{kind}{b}_"
-            if os.path.isdir(wh):
-                for d in os.listdir(wh):
-                    if d.startswith(prefix) and not spark.catalog.tableExists(d):
-                        shutil.rmtree(os.path.join(wh, d), ignore_errors=True)
-            rows = lsh_sig_table(spark, sf_dir, bits).select(
-                "vec_id",
-                F.posexplode("sigs").alias("t", "sig"),
-            ).select(
-                "vec_id",
-                "t",
-                "sig",
-                F.expr(_pk_expr()).alias("pk"),
-            )
-            (
-                rows.write.format("parquet")
-                .bucketBy(LSH_INDEX_BUCKETS, "pk")
-                .sortBy("pk")
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
-        return name
-
-    return spark.table(
-        plan_memo(spark, ("lsh_sigbkt", os.path.abspath(sf_dir), b), fp, build)
-    )
-
-
 @query("ann_lsh_topk", oracle=LSH_ORACLE)
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via signed-random-projection LSH — the bucket-join
@@ -935,40 +843,20 @@ def _lsh_candidates(
     multiprobe: bool,
     bits: int | None,
     n_queries: int,
-    bucketed: bool | None = None,
 ) -> DataFrame:
     """DataFrame[qid, cid] — the DISTINCT bucket-join candidate pairs,
     shared by the exact-decimal rank path and the numpy fast scorer.
     Signatures come from the persisted index; the probe fan-out happens
     on the tiny broadcast query side.
 
-    TWO physically different reads of the same index, same results
-    (pinned by ``test_lsh_bucketed_candidates_match_unpruned``):
-
-    - ``bucketed=False`` (the default): the exploded ARRAY index
-      streams through the broadcast (t, sig) join — one scan stage at
-      the session's parallelism. This is the measured winner at every
-      fixture/probe scale: candidates for 5 queries at 100k vectors in
-      0.8 s vs 5.5 s bucketed, 64 queries 0.67 s vs 23.7 s (r11
-      decomposition, SCALE.md round 11), because the 1024-bucket scan
-      pays ~1024 task launches against kilobyte files.
-    - ``bucketed=True`` (opt-in; env ``SPARK_GRAFT_LSH_BUCKETED=1``):
-      the BUCKETED index (``lsh_sig_bucketed``) scanned with the probe
-      keys pushed down as a literal ``pk IN (...)`` filter — the plan
-      shows ``SelectedBucketsCount: <probed> out of 1024`` (plan-pinned
-      in tests). The filter is semantically redundant (join-key
-      equality implies pk membership), so results are byte-identical.
-      This is the 100 TB SERVE shape — a bucket there is ~128 MB and
-      the pruned read skips real I/O, where at fixture scale it can
-      only skip task launches it still has to schedule. The probe-key
-      collect is a bounded constant-size closure (at most n_queries x
-      LSH_TABLES x (bits+1) int64s), like the stage-1 query matrix of
-      ``ann_int8_rerank_topk``."""
+    The exploded ARRAY index streams through the broadcast (t, sig)
+    join — one scan stage at the session's parallelism. A 1024-bucket
+    index scanned with the probe keys pushed down as a ``pk IN (...)``
+    filter was measured slower at every fixture/probe scale: candidates
+    for 5 queries at 100k vectors in 0.8 s vs 5.5 s bucketed, 64 queries
+    0.67 s vs 23.7 s (r11 decomposition, SCALE.md round 11), because the
+    bucketed scan pays ~1024 task launches against kilobyte files."""
     b = LSH_BITS if bits is None else bits
-    if bucketed is None:
-        bucketed = os.environ.get(
-            "SPARK_GRAFT_LSH_BUCKETED", ""
-        ).lower() in ("1", "true", "yes")
     sigs_arr = lsh_sig_table(spark, sf_dir, bits).select(
         "vec_id", F.posexplode("sigs").alias("t", "sig")
     )
@@ -984,20 +872,8 @@ def _lsh_candidates(
         )
     else:
         qsigs = qside.select(F.col("vec_id").alias("qid"), "t", "sig")
-    if bucketed:
-        probe_pks = sorted(
-            r.pk
-            for r in qsigs.select(F.expr(_pk_expr()).alias("pk"))
-            .distinct()
-            .collect()
-        )
-        sigs = lsh_sig_bucketed(spark, sf_dir, bits).where(
-            F.col("pk").isin(probe_pks)
-        )
-    else:
-        sigs = sigs_arr
     return (
-        sigs.join(F.broadcast(qsigs), ["t", "sig"])
+        sigs_arr.join(F.broadcast(qsigs), ["t", "sig"])
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", F.col("vec_id").alias("cid"))
         .distinct()

@@ -622,14 +622,12 @@ def heavy_hitters_cms_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate scale only — production queries the sketch alone.
 
     r15 (guide §2.5): DEPTH md5s per token occurrence (~10 M at sf0.1)
-    ride the scan stage; spread_scan fans the docs across cores first
+    ride the scan stage; spread_frame fans the docs across cores first
     (no-op at real scale). Interleaved A/B: ~3.0 s -> ~2.0 s (-33%)."""
     from ..functions.text import exploded_words
-    from ..tables import spread_scan
+    from ..tables import spread_frame
 
-    docs = spread_scan(
-        spark, sf_dir, "documents", table(spark, sf_dir, "documents")
-    )
+    docs = spread_frame(table(spark, sf_dir, "documents"))
     toks = exploded_words(docs, "text").select(F.col("word").alias("token"))
     bucket = (
         f"CAST(conv(substr(md5(concat(CAST(r AS STRING), ':', token)),"

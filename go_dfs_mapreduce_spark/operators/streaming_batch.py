@@ -538,6 +538,20 @@ def _split_events(
     return n_rows
 
 
+def _require_batches(q, n_files: int, name: str) -> None:
+    """Raise unless the finished query ``q`` ran at least ``n_files``
+    micro-batches that read data (maxFilesPerTrigger=1 over ``n_files``
+    files; AvailableNow may append a trailing no-data batch, which does
+    not count). Gate-green then implies multi-batch state execution,
+    which is the point of every live run."""
+    n_batches = sum(1 for p in q.recentProgress if p and p["numInputRows"] > 0)
+    if n_batches < n_files:
+        raise RuntimeError(
+            f"{name} ran {n_batches} data micro-batches, expected {n_files} "
+            "— multi-batch state execution is the point of this query"
+        )
+
+
 def _run_live(spark: SparkSession, sf_dir: str, builder, prefix: str,
               shuffle_partitions: int = 8,
               output_mode: str = "complete",
@@ -601,18 +615,8 @@ def _run_live(spark: SparkSession, sf_dir: str, builder, prefix: str,
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         q.awaitTermination()
-        # gate-green implies multi-batch: count batches that read data
-        # (AvailableNow may append a trailing no-data batch; don't count it)
-        n_batches = sum(
-            1 for p in q.recentProgress if p and p["numInputRows"] > 0
-        )
-        if n_rows >= n_files and n_batches < n_files:
-            raise RuntimeError(
-                f"live run executed {n_batches} data micro-batches, "
-                f"expected {n_files} (maxFilesPerTrigger=1 over {n_files} "
-                "files) — multi-batch state execution is the point of the "
-                "*_live queries"
-            )
+        if n_rows >= n_files:
+            _require_batches(q, n_files, qname)
         return spark.table(qname)
     finally:
         if started:
@@ -1202,15 +1206,8 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         q.awaitTermination()
-        n_batches = sum(
-            1 for p in q.recentProgress if p and p["numInputRows"] > 0
-        )
-        if n_rows >= n_files and n_batches < n_files:
-            raise RuntimeError(
-                f"upsert run executed {n_batches} data micro-batches, "
-                f"expected {n_files} — multi-batch state maintenance is "
-                "the point of this query"
-            )
+        if n_rows >= n_files:
+            _require_batches(q, n_files, "stream_upsert_latest_state")
         live, _ = _upsert_live_dir(state_dirs)
         return spark.read.parquet(live)
 
@@ -1494,14 +1491,7 @@ def stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFrame
             q.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        n_batches = sum(
-            1 for p in q.recentProgress if p and p["numInputRows"] > 0
-        )
-        if n_batches < n_files:
-            raise RuntimeError(
-                f"incremental dedup ran {n_batches} data micro-batches, "
-                f"expected {n_files} — per-batch index growth is the point"
-            )
+        _require_batches(q, n_files, "stream_dedup_incremental_live")
         out_schema = (
             "new_doc BIGINT, matched_doc BIGINT, jaccard DOUBLE, "
             "matched_in STRING"

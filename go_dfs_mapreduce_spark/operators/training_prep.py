@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..tables import spread_scan, table
+from ..tables import spread_frame, table
 from .dedup import _NORM_DUCK, _NORM_SPARK, ngram_expr
 
 
@@ -851,10 +851,10 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     r15 (guide §2.5): the two md5 gates cost 2 hashes PER TOKEN POSITION
     (~2.5 M md5s at sf0.1), and every one of them pipelines into the
     scan stage — one task on a single-row-group gate file while 31 cores
-    idle. spread_scan round-robins the 5 k doc rows across the session's
+    idle. spread_frame round-robins the 5 k doc rows across the session's
     cores before the per-position transforms (no-op at real corpus
     scale); measured 73.5 s -> 4.3 s at sf0.1 (17x)."""
-    docs = spread_scan(spark, sf_dir, "documents", table(spark, sf_dir, "documents"))
+    docs = spread_frame(table(spark, sf_dir, "documents"))
     hs = _SPAN_H_SPARK.format(salt="S")
     hl = _SPAN_H_SPARK.format(salt="L")
     t = docs.select(

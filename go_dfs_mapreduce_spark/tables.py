@@ -98,67 +98,48 @@ def _parse_bytes(v: str) -> int:
     return max(1, int(float(s) * mult))
 
 
-def spread_scan(
-    spark: SparkSession, sf_dir: str, name: str, df: DataFrame
-) -> DataFrame:
-    """Scale-adaptive spread for compute-heavy consumers of a table scan
+def local_bytes(paths: list[str]) -> int | None:
+    """On-disk bytes of ``paths``: files, ``file:`` URIs, or directories
+    whose data files (names not starting with ``_`` or ``.``) are summed.
+    None when any of them cannot be read locally (an hdfs/s3 URI, a
+    vanished file): the one byte estimate every split-size rule uses."""
+    size = 0
+    try:
+        for p in paths:
+            p = p.removeprefix("file:")
+            if os.path.isdir(p):
+                size += sum(
+                    os.path.getsize(os.path.join(p, f))
+                    for f in os.listdir(p)
+                    if not f.startswith(("_", "."))
+                )
+            else:
+                size += os.path.getsize(p)
+    except OSError:
+        return None
+    return size
+
+
+def spread_frame(df: DataFrame) -> DataFrame:
+    """Scale-adaptive spread for a compute-heavy stage fed by a file scan
     (r15, guide §2.5 "input skew: one huge unsplittable file ... repartition
     immediately after the read").
 
     The gate corpora are single-file, SINGLE-ROW-GROUP parquet — a row
     group is the unit of scan parallelism, so every downstream expression
-    Spark pipelines into the scan (decimal array folds, md5 lanes, regexp)
-    runs as ONE task while the other cores idle. When the table's byte
-    size yields fewer scan splits than the session's cores, round-robin
-    repartition to the core count so per-row compute AFTER the exchange
-    runs at full parallelism. At any real scale the estimate (bytes /
-    maxPartitionBytes) exceeds the core count and this is a NO-OP — no
-    exchange is added on a 100 TB corpus; the cluster-scale spread is the
-    file layout itself. The exchange only ever carries the pruned columns
-    the consumer selected, and a round-robin repartition of a parquet scan
-    is deterministic under task retry (stable input order + the built-in
-    sort-before-repartition)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-                if not f.startswith(("_", "."))
-            )
-        else:
-            size = os.path.getsize(path)
-    except OSError:
-        return df
-    max_split = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
-    cores = max(spark.sparkContext.defaultParallelism, 1)
-    est_splits = max(1, (size + max_split - 1) // max_split)
-    if est_splits >= cores:
-        return df
-    return df.repartition(cores)
-
-
-def spread_frame(df: DataFrame) -> DataFrame:
-    """Scale-adaptive spread for a compute-heavy Arrow/Python stage fed by
-    an arbitrary (already pruned, few-column) frame — the ``spread_scan``
-    idea for inputs that are not a direct table scan (r15, guide §2.5).
-
-    The gate corpora are single-file, single-row-group parquet, so a
-    ``select("doc_id").mapInPandas(...)`` decode chain runs as ONE task
-    while the other cores idle. When the frame's input files yield fewer
-    scan splits than the session's cores, round-robin repartition to the
-    core count; at any real corpus scale the scan already has >= cores
-    splits and this is a NO-OP. The exchange carries only the pruned
-    columns (a doc_id per row for the decode chains), and a round-robin
-    repartition of a deterministic scan is retry-safe (built-in
-    sort-before-repartition).
+    Spark pipelines into the scan (decimal array folds, md5 lanes, regexp,
+    a ``mapInPandas`` decode chain) runs as ONE task while the other cores
+    idle. When the frame's input files yield fewer scan splits than the
+    session's cores, round-robin repartition to the core count so per-row
+    compute AFTER the exchange runs at full parallelism. At any real scale
+    the scan already has >= cores splits and this is a NO-OP — no exchange
+    is added on a 100 TB corpus; the cluster-scale spread is the file
+    layout itself. The exchange only ever carries the columns the consumer
+    selected, and a round-robin repartition of a deterministic scan is
+    retry-safe (built-in sort-before-repartition).
 
     r16 (ADVICE r15): the split estimate comes from the frame's
-    input-file METADATA (``inputFiles()`` + on-disk bytes /
-    maxPartitionBytes — exactly ``spread_scan``'s arithmetic), not from
+    input-file METADATA (``inputFiles()`` + ``local_bytes``), not from
     ``df.rdd.getNumPartitions()``, which forced a driver-side physical
     planning + RDD conversion of the frame on every call and could
     disagree with the AQE-finalized runtime partition count. Every
@@ -177,12 +158,9 @@ def spread_frame(df: DataFrame) -> DataFrame:
     files = df.inputFiles()
     if not files:
         return df
-    size = 0
-    for uri in files:
-        try:
-            size += os.path.getsize(uri.removeprefix("file:"))
-        except OSError:
-            return df
+    size = local_bytes(files)
+    if size is None:
+        return df
     max_split = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )

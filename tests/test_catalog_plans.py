@@ -1067,7 +1067,7 @@ def test_round9_late_operator_plan_contracts(spark, sf_dir):
 
 def test_span_corruption_plan_contract(spark, sf_dir):
     """span_corruption_plan: pure in-row layout — no joins, no python
-    worker, 2-column scan. r15: the scale-adaptive spread_scan may add
+    worker, 2-column scan. r15: the scale-adaptive spread_frame may add
     at most ONE round-robin exchange when the gate's single-row-group
     file under-splits the scan (a no-op at real corpus scale); the
     per-position md5 transforms must run above it."""
@@ -1186,46 +1186,9 @@ def test_round10_operator_plan_contracts(spark, sf_dir):
     assert "Join" not in a["plan"]
 
 
-def test_lsh_bucketed_index_scan_is_pruned(spark, sf_dir):
-    """VERDICT r10 #3: the OPT-IN bucketed read of the LSH signature
-    index must scan through a BUCKETED file source pruned by the
-    literal probe keys — SelectedBucketsCount strictly below the bucket
-    count — not a full-index stream into the join. (The r11
-    decomposition measured this read as the 100 TB serve shape but a
-    task-launch pessimization at fixture scale, so the DEFAULT path is
-    the array join — SCALE.md round 11.)"""
-    import re
-
-    from go_dfs_mapreduce_spark.operators import similarity as S
-    from go_dfs_mapreduce_spark.plans.audit import formatted_plan
-
-    bits = S._calibrated_bits_for(spark, sf_dir)
-    cand = S._lsh_candidates(
-        spark,
-        sf_dir,
-        multiprobe=True,
-        bits=bits,
-        n_queries=S.N_QUERIES,
-        bucketed=True,
-    )
-    plan = formatted_plan(cand)
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m, plan[:3000]
-    sel, tot = int(m.group(1)), int(m.group(2))
-    assert tot == S.LSH_INDEX_BUCKETS
-    # the probe set is n_queries * LSH_TABLES * (bits+1) keys at most;
-    # pruning must engage (strictly fewer buckets than total), and can
-    # never select more buckets than probe keys
-    assert sel < tot
-    assert sel <= S.N_QUERIES * S.LSH_TABLES * (bits + 1)
-    assert "In(pk" in plan  # the literal probe filter reached the scan
-
-
-def test_lsh_bucketed_candidates_match_unpruned(spark, sf_dir):
-    """The pk IN (...) prune filter is semantically redundant (join-key
-    equality implies pk membership) — the opt-in bucketed read's
-    candidate pair set must be byte-identical to the default array-join
-    path AND to the unpruned join recomputed inline."""
+def test_lsh_candidates_match_unpruned(spark, sf_dir):
+    """The multiprobe LSH candidate pair set must equal the unpruned
+    (t, sig) bucket join recomputed inline."""
     from go_dfs_mapreduce_spark.operators import similarity as S
 
     bits = S._calibrated_bits_for(spark, sf_dir)
@@ -1237,21 +1200,8 @@ def test_lsh_bucketed_candidates_match_unpruned(spark, sf_dir):
             multiprobe=True,
             bits=bits,
             n_queries=S.N_QUERIES,
-            bucketed=True,
         ).collect()
     }
-    got_default = {
-        (r.qid, r.cid)
-        for r in S._lsh_candidates(
-            spark,
-            sf_dir,
-            multiprobe=True,
-            bits=bits,
-            n_queries=S.N_QUERIES,
-            bucketed=False,
-        ).collect()
-    }
-    assert got == got_default
 
     sigs = S.lsh_sig_table(spark, sf_dir, bits).select(
         "vec_id", F.posexplode("sigs").alias("t", "sig")

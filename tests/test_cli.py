@@ -588,8 +588,7 @@ def test_result_pull_streams_rows_lazily(spark):
     materializing list(), so the Python driver holds O(socket buffer)
     rows however big the reducer output — PULL_POOL sizes only the
     JVM-side in-flight partitions. Pin that the pull yields an
-    incremental iterator with the right contents, and that the pool
-    size honors GO_DFS_MR_PULL_POOL."""
+    incremental iterator with the right contents."""
     from go_dfs_mapreduce_spark.mapreduce import results as results_mod
 
     df = spark.range(1000).selectExpr(
@@ -610,21 +609,6 @@ def test_result_pull_streams_rows_lazily(spark):
     for _ in range(3):
         next(it2)
     del it2
-    # env knob (ADVICE r14): PULL_POOL is read from GO_DFS_MR_PULL_POOL
-    import importlib
-    import os as _os
-
-    old = _os.environ.get("GO_DFS_MR_PULL_POOL")
-    try:
-        _os.environ["GO_DFS_MR_PULL_POOL"] = "2"
-        importlib.reload(results_mod)
-        assert results_mod.PULL_POOL == 2
-    finally:
-        if old is None:
-            _os.environ.pop("GO_DFS_MR_PULL_POOL", None)
-        else:
-            _os.environ["GO_DFS_MR_PULL_POOL"] = old
-        importlib.reload(results_mod)
 
 
 def test_result_pull_falls_back_without_socket_helper(spark, monkeypatch):

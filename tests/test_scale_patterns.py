@@ -6,21 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from go_dfs_mapreduce_spark.functions.skew import salted_count
 from go_dfs_mapreduce_spark.plans import audit_plan
-from go_dfs_mapreduce_spark.sources.bucketing import cobucketed_join, write_bucketed
 from go_dfs_mapreduce_spark.tables import table
-
-
-def test_salted_count_matches_plain_groupby(spark, sf_dir):
-    from go_dfs_mapreduce_spark.functions.text import exploded_words
-
-    docs = table(spark, sf_dir, "documents")
-    words = exploded_words(docs, "text")
-    plain = {r.word: r.cnt for r in
-             words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    salted = {r.word: r.cnt for r in salted_count(words, "word", n_salts=8).collect()}
-    assert salted == plain
 
 
 def test_bucketed_join_elides_shuffle(spark, sf_dir, tmp_path):
@@ -32,10 +19,20 @@ def test_bucketed_join_elides_shuffle(spark, sf_dir, tmp_path):
         li = table(spark, sf_dir, "lineitem").select(
             F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
         )
-        write_bucketed(orders, "b_orders", "o_orderkey", 8)
-        write_bucketed(li, "b_lineitem", "o_orderkey", 8)
+        # bucketBy + sortBy + saveAsTable: the scan reports the bucketing,
+        # so SortMergeJoin needs no Exchange on either side
+        for df, name in ((orders, "b_orders"), (li, "b_lineitem")):
+            (
+                df.write.format("parquet")
+                .bucketBy(8, "o_orderkey")
+                .sortBy("o_orderkey")
+                .mode("overwrite")
+                .saveAsTable(name)
+            )
 
-        bucketed = cobucketed_join(spark, "b_orders", "b_lineitem", ["o_orderkey"])
+        bucketed = spark.table("b_orders").join(
+            spark.table("b_lineitem"), ["o_orderkey"]
+        )
         a_bucketed = audit_plan(bucketed)
 
         plain = orders.join(li, ["o_orderkey"])

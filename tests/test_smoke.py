@@ -71,3 +71,47 @@ def test_every_operator_builder_is_registered_or_called():
             ):
                 orphans.append(f"{path.stem}.{fn.name}")
     assert not orphans, f"unregistered, uncalled builders: {orphans}"
+
+
+def test_package_reads_only_deployment_env_vars():
+    """Knob-creep guard, no Spark session: the package reads exactly the
+    deployment settings from the environment. A tuning value that
+    nothing sets is a constant with its measurement cited where it is
+    used, not an env var."""
+    import ast
+    from pathlib import Path
+
+    from go_dfs_mapreduce_spark import registry
+
+    pkg = Path(registry.__file__).parent
+
+    def is_environ(n):
+        return (isinstance(n, ast.Name) and n.id == "environ") or (
+            isinstance(n, ast.Attribute) and n.attr == "environ"
+        )
+
+    names = set()
+    for path in pkg.rglob("*.py"):
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and (
+                n.func.attr == "getenv"
+                or (n.func.attr == "get" and is_environ(n.func.value))
+            ):
+                key = n.args[0] if n.args else None
+            elif isinstance(n, ast.Subscript) and is_environ(n.value):
+                key = n.slice
+            else:
+                continue
+            names.add(
+                key.value
+                if isinstance(key, ast.Constant)
+                else f"<non-literal name at {path.name}:{n.lineno}>"
+            )
+    assert names == {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_WAREHOUSE",
+        "SPARK_GRAFT_DERIVED_DIR",
+        "SPARK_GRAFT_FP_MODE",
+    }

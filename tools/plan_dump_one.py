@@ -2,16 +2,29 @@
 
 Usage: python tools/plan_dump_one.py --suffix after [--out-dir plans/r15]
            [--sf-dir /root/testdata/sf0.1] name [name...]
+
+Expression ids (``#<n>``), exchange ids (``plan_id=<n>``) and codegen stage
+ids (``codegen id : <n>``) come from process-global counters or from the
+order in which a cached frame's stages finished, so the dump writes each
+as ``<n>``: two dumps of one tree are byte-identical, and a before/after
+pair differs only where the plan does.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
+
+_VOLATILE_IDS = re.compile(r"(#|plan_id=|codegen id : )\d+")
+
+
+def normalise(plan: str) -> str:
+    return _VOLATILE_IDS.sub(r"\1<n>", plan)
 
 
 def main() -> None:
@@ -37,7 +50,7 @@ def main() -> None:
         )
         path = os.path.join(args.out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
-            f.write(txt)
+            f.write(normalise(txt))
         print("wrote", path)
 
 
