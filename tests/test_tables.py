@@ -130,6 +130,31 @@ def test_table_row_count_fallback_counts_non_parquet(spark, tmp_path):
     assert n is None or n >= 0
 
 
+def test_spread_scan_noop_when_splits_cover_cores(spark, tmp_path):
+    """A table scan passed to spread_frame must get NO exchange when the
+    file layout already yields >= cores scan splits (the real-scale
+    posture): with maxPartitionBytes shrunk below the file size the
+    estimate exceeds the core count and the plan must stay a bare scan."""
+    from go_dfs_mapreduce_spark.tables import SMOKE_SF_DIR, spread_frame, table
+
+    df = table(spark, SMOKE_SF_DIR, "documents")
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
+        out = spread_frame(df)
+        assert out is df
+        assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    # and WITH the default split size the gate-scale single-row-group
+    # file spreads to the session's core count
+    spread = spread_frame(df)
+    assert (
+        spread.rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
+
+
 def test_spread_frame_adds_exchange_only_when_underpartitioned(spark, sf_dir):
     """r15: spread_frame round-robins a few-partition frame to the core
     count and is an identity on frames that already have >= cores
@@ -145,15 +170,6 @@ def test_spread_frame_adds_exchange_only_when_underpartitioned(spark, sf_dir):
 
     wide = spark.range(0, 1000, 1, cores + 4)
     assert spread_frame(wide) is wide
-
-    # a scan whose byte estimate already covers the cores (the real-scale
-    # posture, forced here by a 1-byte split size) is left as it is
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
-        assert spread_frame(ids) is ids
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def test_spread_frame_estimate_from_mocked_input_files(spark, tmp_path):
