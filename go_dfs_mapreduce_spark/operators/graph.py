@@ -375,8 +375,9 @@ def common_neighbors_topk_from_edges(
     # A shuffled-hash join streams the probe side through the per-
     # partition hash map with no sort and no buffering copy — interleaved
     # A/B at sf0.1: 17.5 -> 15.2 s median (-13%), identical top-k
-    # (tools/cn_variants_r16.py; fastmap/sort-agg/partition-count arms
-    # all measured worse or flat and are recorded in OPTIMIZATION_r16).
+    # (tools/cn_variants_r16.py, readable at commit cee7023; fastmap/
+    # sort-agg/partition-count arms all measured worse or flat and are
+    # recorded in OPTIMIZATION_r16).
     # Build side = the hinted adjacency ``b`` (BuildRight, pinned in
     # tests/test_catalog_plans.py). Spark has NO runtime fallback from a
     # hinted shuffled-hash join to sort-merge: the build map must fit in

@@ -14,6 +14,8 @@ Spark's session_window definition exactly.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
@@ -538,6 +540,19 @@ def _split_events(
     return n_rows
 
 
+@contextlib.contextmanager
+def _shuffle_partitions(spark: SparkSession, n: int):
+    """Scope ``spark.sql.shuffle.partitions`` to ``n`` for the body and
+    restore the session's value on every path. A stream's state partition
+    count is fixed from this conf when the query starts."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 def _require_batches(q, n_files: int, name: str) -> None:
     """Raise unless the finished query ``q`` ran at least ``n_files``
     micro-batches that read data (maxFilesPerTrigger=1 over ``n_files``
@@ -600,9 +615,7 @@ def _run_live(spark: SparkSession, sf_dir: str, builder, prefix: str,
             spark, node, watermark=watermark,
             options={"maxFilesPerTrigger": "1", "latestFirst": "false"},
         )
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        try:
+        with _shuffle_partitions(spark, shuffle_partitions):
             q = (
                 builder(ev)
                 .writeStream.format("memory")
@@ -612,8 +625,6 @@ def _run_live(spark: SparkSession, sf_dir: str, builder, prefix: str,
                 .start()
             )
             started = True
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         q.awaitTermination()
         if n_rows >= n_files:
             _require_batches(q, n_files, qname)
@@ -1194,17 +1205,13 @@ def stream_upsert_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, land, watermark=None,
             options={"maxFilesPerTrigger": "1", "latestFirst": "false"},
         )
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with _shuffle_partitions(spark, 8):
             q = (
                 ev.writeStream.foreachBatch(merge)
                 .option("checkpointLocation", os.path.join(scratch, "ck"))
                 .trigger(availableNow=True)
                 .start()
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         q.awaitTermination()
         if n_rows >= n_files:
             _require_batches(q, n_files, "stream_upsert_latest_state")
@@ -1479,9 +1486,7 @@ def stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFrame
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with _shuffle_partitions(spark, 8):
             q = (
                 stream.writeStream.foreachBatch(proc)
                 .option("checkpointLocation", os.path.join(scratch, "ck"))
@@ -1489,8 +1494,6 @@ def stream_dedup_incremental_live(spark: SparkSession, sf_dir: str) -> DataFrame
                 .start()
             )
             q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         _require_batches(q, n_files, "stream_dedup_incremental_live")
         out_schema = (
             "new_doc BIGINT, matched_doc BIGINT, jaccard DOUBLE, "

@@ -331,8 +331,9 @@ def recursive_compound_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     that position (branching is by POSITION arithmetic, lst - seq,
     never by value nullness). Depth falls from 24 to ceil(24/6) = 4
     levels (+1 termination probe). Interleaved A/B at sf0.1
-    (tools/recursion_ab_r16.py): k=1 6.76 s, k=2 4.90 s, k=4 3.55 s,
-    k=6 3.10 s median (-54%), sorted outputs identical at every k;
+    (tools/recursion_ab_r16.py, readable at commit cee7023): k=1
+    6.76 s, k=2 4.90 s, k=4 3.55 s, k=6 3.10 s median (-54%), sorted
+    outputs identical at every k;
     full 3-SF oracle proof at commit, block-boundary chain lengths
     pinned against a Python fold in tests/test_llm_ops.py.
     Deeper unrolling flattens out (the remaining wall is the populate

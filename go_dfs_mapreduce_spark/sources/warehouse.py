@@ -279,20 +279,17 @@ class Warehouse:
         incremental-reload pattern (a full-table overwrite at 100 TB
         rewrites everything; this rewrites one day/source). Uses Spark's
         ``partitionOverwriteMode=dynamic`` so the set of replaced
-        partitions is discovered from the data, not declared."""
+        partitions is discovered from the data, not declared. The mode is
+        a write option, not a session conf: ``df`` may belong to another
+        session (a foreachBatch frame lives in the stream's clone), and
+        the option reaches it while leaving every session's conf as is."""
         if not self._exists(name):
             raise FileNotFoundError(f"file {name!r} not stored")
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            parts = self._partition_cols(name)
-            w = df.write.mode("overwrite")
-            if parts:
-                w = w.partitionBy(*parts)
-            w.parquet(self._table_dir(name))
-        finally:
-            conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        parts = self._partition_cols(name)
+        w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        if parts:
+            w = w.partitionBy(*parts)
+        w.parquet(self._table_dir(name))
         return name
 
     def compact(self, name: str, target_files: int = 1) -> int:

@@ -557,7 +557,8 @@ def test_graph_family_plan_shapes(spark, sf_dir):
     # r16: the wedge self-join is a SHUFFLED-HASH join (no sort, no
     # per-probe match-buffer re-scan, per-partition build maps) — the
     # broadcast the planner picked unhinted shipped the WHOLE adjacency
-    # map to every task and measured 13% slower (tools/cn_variants_r16.py).
+    # map to every task and measured 13% slower (tools/cn_variants_r16.py,
+    # readable at commit cee7023).
     # The build side is the hinted adjacency (the right input): its map
     # size is what the apex cap and partition sizing bound (graph.py)
     assert "ShuffledHashJoin Inner BuildRight" in a["plan"]

@@ -174,6 +174,47 @@ def test_stream_foreachbatch_sinks_into_partitioned_warehouse(
     assert wh.read("events_live").count() == want.count()
 
 
+def test_foreachbatch_overwrite_keeps_other_partitions(spark, tmp_path):
+    """A foreachBatch frame belongs to the stream's cloned session, so
+    the dynamic overwrite mode must travel with the write, not with a
+    conf flip on the warehouse's session: each micro-batch replaces only
+    the partitions it carries, and the seed's and earlier batches'
+    partitions survive."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_dfs_mapreduce_spark.sources import Warehouse
+
+    schema = "id INT, p STRING"
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.store_df(spark.createDataFrame([(0, "z")], schema), "t", partition_by=["p"])
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, rows in enumerate([[(1, "a"), (2, "b")], [(3, "c")]]):
+        path = src / f"batch_{i}.parquet"
+        ids, ps = zip(*rows)
+        pq.write_table(
+            pa.table({"id": pa.array(ids, pa.int32()), "p": list(ps)}), path
+        )
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))
+
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+        .writeStream.foreachBatch(lambda df, _: wh.overwrite_partitions(df, "t"))
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination(120)
+
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 2
+    got = sorted((r.id, r.p) for r in wh.read("t").collect())
+    assert got == [(0, "z"), (1, "a"), (2, "b"), (3, "c")]
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "STATIC"
+
+
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_stream_dir):
     """Stream-stream time-interval join (purchase->click attribution):
     two watermarked file streams joined in append mode must produce
