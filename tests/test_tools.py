@@ -103,6 +103,35 @@ def test_profile_record_and_identity_ab(measure, spark, sf_dir, tmp_path):
     assert relational.table is real_table
 
 
+def test_ab_arm_patch_runs_under_plan_memo(measure, spark, sf_dir, tmp_path):
+    """A patch on code that runs inside a memoized build
+    (``derived._read_back``'s ``plan_memo``) must run in every rep of its
+    arm, not be answered from plans an earlier arm built."""
+    import __spark_entry__ as entry
+
+    wrapper = tmp_path / "arm_spread.py"
+    wrapper.write_text(
+        "from go_dfs_mapreduce_spark import derived\n"
+        "real = derived._spread_partitions\n"
+        "calls = []\n"
+        "def spread(spark, dst):\n"
+        "    calls.append(dst)\n"
+        "    return real(spark, dst)\n"
+    )
+    arms = [
+        measure.parse_arm("ctrl"),
+        measure.parse_arm(f"spread:{PKG}.derived._spread_partitions={wrapper}:spread"),
+    ]
+    recs = measure.ab_one(spark, entry.queries(), "ann_lsh_topk", arms, sf_dir, reps=2)
+    assert [(r["arm"], r["reps"], r["equal"], r["error"]) for r in recs] == [
+        ("ctrl", 2, True, None),
+        ("spread", 2, True, None),
+    ]
+    calls = arms[1][1][0][2].__globals__["calls"]
+    assert len(calls) == 2 and calls[0] == calls[1], calls
+    assert "embedding_lsh_sigs-" in calls[0]
+
+
 def _lookup(module: str, name: str | None):
     """``module.name``: an attribute of ``module``, else its submodule."""
     mod = importlib.import_module(module)

@@ -16,13 +16,13 @@ names and no ``--all`` it profiles ``bench.HEADLINE``.
 
 ``ab`` warms each arm with one build at ``--sf-dir``, then runs every arm
 on each query, interleaved in one JVM, the arm order reversed every other
-rep. An arm is a name plus patches: ``TARGET`` is a dotted ``module.attr``;
-``REPL`` is a dotted name or ``path.py:attr``. Replacements are resolved
-before any patch is applied (so a wrapper may capture the original), and an
-arm's patches hold only while it runs. The first arm is the control. One
-JSON line per (query, arm): median and quartiles of build + plan + collect,
-wins against the control (``k/n``), and ``equal`` (every rep's sorted rows
-match the control's).
+rep; every arm's build starts with no cached blocks and an empty memo
+store. ``TARGET`` is a dotted ``module.attr``; ``REPL`` a dotted name or
+``path.py:attr``, resolved before any patch is applied (so a wrapper may
+capture the original). Patches hold only while their arm runs; the first
+arm is the control. One JSON line per (query, arm): median and quartiles
+of build + plan + collect, wins against the control (``k/n``), and
+``equal`` (every rep's sorted rows match the control's).
 
 ``plan`` writes ``explain("formatted")`` of each query, with expression,
 exchange and codegen ids normalised, to ``D/<name>_<S>.txt``. JSON goes
@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import argparse
 import contextlib
-import importlib
 import importlib.util
 import json
 import os
@@ -45,6 +44,8 @@ import traceback
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
+
+from perfbench.spans import Tracer  # noqa: E402
 
 # the tables whose footers bench.py warms before timing
 _WARM_TABLES = ("region", "lineitem", "orders", "customer", "events",
@@ -135,32 +136,21 @@ def patched(patches):
 
 
 # -- counters ----------------------------------------------------------------
-class Counters:
-    """Job and stage ids are sequential per application, so the delta of
-    the scheduler's next ids across a call is what it fired, from any
-    thread (streaming micro-batches included). Stages and tasks are read
-    from the status tracker once the listener bus has drained."""
+class Counters(Tracer):
+    """perfbench's job/stage/task counting (id deltas, status-store sums),
+    plus ``exec.stages`` (stages that ran tasks: ``exec_end`` adds each
+    stage's tasks through ``add``) and py4j calls. No streaming listener."""
 
     def __init__(self, spark) -> None:
         self._sc = spark.sparkContext
         self._jsc = self._sc._jsc.sc()
         self._client = self._sc._gateway._gateway_client
+        self.reset()
 
-    def ids(self) -> tuple[int, int]:
-        dag = self._jsc.dagScheduler()
-        return int(dag.nextJobId()), int(dag.nextStageId())
-
-    def stages_tasks(self, first: int, end: int) -> tuple[int, int]:
-        """Stages in ``[first, end)`` that ran tasks (skipped ones run none)."""
-        self._jsc.listenerBus().waitUntilEmpty()
-        tracker = self._sc.statusTracker()
-        stages = tasks = 0
-        for sid in range(first, end):
-            info = tracker.getStageInfo(sid)
-            if info is not None and info.numCompletedTasks > 0:
-                stages += 1
-                tasks += info.numCompletedTasks
-        return stages, tasks
+    def add(self, metric: str, value: float) -> None:
+        super().add(metric, value)
+        if metric == "exec.tasks" and value > 0:
+            super().add("exec.stages", 1)
 
     @contextlib.contextmanager
     def py4j_calls(self):
@@ -180,6 +170,16 @@ class Counters:
 
 
 # -- subcommands -------------------------------------------------------------
+def fresh(spark) -> None:
+    """Drop cached blocks and the memo store: memoized plans are keyed by
+    input version, not arm, so a later arm would reuse the plans an earlier
+    one built and a patch on code under ``plan_memo`` would never run."""
+    from go_dfs_mapreduce_spark import memo
+
+    spark.catalog.clearCache()
+    memo._STORE.clear()
+
+
 def warm(spark, qs, names, sf_dir, build_dir) -> None:
     """Table footers at ``sf_dir``, then one build of each query at
     ``build_dir``, so timed reps pay no codegen compilation or first touch."""
@@ -187,8 +187,7 @@ def warm(spark, qs, names, sf_dir, build_dir) -> None:
         spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet")).count()
     for name in names:
         try:
-            qs[name](spark, build_dir).write.mode("overwrite").format(
-                "noop").save()
+            qs[name](spark, build_dir).write.format("noop").mode("overwrite").save()
         except Exception as ex:  # noqa: BLE001 - the timed reps report it
             log(f"warm {name}: {_error(ex)}")
 
@@ -202,22 +201,23 @@ def profile_one(spark, qs, name: str, sf_dir: str, reps: int) -> dict:
     try:
         for _ in range(reps):
             spark.catalog.clearCache()
-            j0, _s0 = c.ids()
+            c.reset()
+            j0 = c.jobs_begin()
             with c.py4j_calls() as calls:
                 t0 = time.perf_counter()
                 df = qs[name](spark, sf_dir)
                 t1 = time.perf_counter()
-            j1, s1 = c.ids()
+            token = c.exec_begin()
             t2 = time.perf_counter()
             df._jdf.queryExecution().executedPlan()
             t3 = time.perf_counter()
             rows = df.collect()
             t4 = time.perf_counter()
-            j2, s2 = c.ids()
-            stages, tasks = c.stages_tasks(s1, s2)
-            for f, v in zip(fields, (_ms(t0, t1), j1 - j0, calls[0],
-                                     _ms(t2, t3), _ms(t3, t4), j2 - j1,
-                                     stages, tasks)):
+            c.exec_end(token)
+            n = c.counters
+            for f, v in zip(fields, (_ms(t0, t1), token[0] - j0, calls[0],
+                                     _ms(t2, t3), _ms(t3, t4), n["exec.jobs"],
+                                     n["exec.stages"], n["exec.tasks"])):
                 samples[f].append(v)
             rec["reps"] += 1
             rec["rows"] = len(rows)
@@ -249,7 +249,7 @@ def ab_one(spark, qs, name: str, arms, sf_dir: str, reps: int) -> list[dict]:
             rows = {}
             for arm, patches in arms if rep % 2 == 0 else arms[::-1]:
                 with patched(patches):
-                    spark.catalog.clearCache()
+                    fresh(spark)
                     t0 = time.perf_counter()
                     df = qs[name](spark, sf_dir)
                     df._jdf.queryExecution().executedPlan()
@@ -320,8 +320,7 @@ def main(argv: list[str] | None = None) -> None:
         import bench
 
         names = list(qs) if args.all else list(bench.HEADLINE)
-    unknown = [n for n in names if n not in qs]
-    if unknown:
+    if unknown := [n for n in names if n not in qs]:
         ap.error(f"not registered: {unknown}")
 
     spark = get_spark(f"measure_{args.cmd}")
@@ -334,6 +333,7 @@ def main(argv: list[str] | None = None) -> None:
             return
         for _, patches in arms or [("", [])]:
             with patched(patches):
+                fresh(spark)
                 warm(spark, qs, names, args.sf_dir,
                      args.sf_dir if arms else SMOKE_SF_DIR)
         for i, name in enumerate(names):
